@@ -11,6 +11,8 @@
 3. Writes expected.json: the sha256 of each input file and the result
    hash of every statement and operator, as the benchmark computes it.
 
+The comparison with DuckDB is the repo's own, tools/compare_oracle.py.
+
 Refuses to pin an operator whose result does not match its oracle. Run it
 only when the inputs or the workload definitions change.
 """
@@ -18,52 +20,28 @@ import hashlib
 import json
 import os
 import re
+import subprocess
 import sys
-
-import duckdb
-import numpy as np
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import run as bench  # noqa: E402
 
 TPCH = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
-TABLES = TPCH + ["events", "documents", "embeddings"]
+COMPARE = os.path.join(bench.ROOT, "tools", "compare_oracle.py")
 
 
-def duckdb_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"create view {t} as select * from '{bench.DATA}/{t}.parquet'")
-    return con
-
-
-def same_result(con, sql, spark_dir):
-    """None if DuckDB's result of sql equals the parquet under spark_dir
-    (columns by name, dtype kind, every value in order), else the reason."""
-    try:
-        odf = con.sql(sql).df()
-    except Exception as e:  # noqa: BLE001 - report any oracle failure
-        return f"duckdb: {e}"
-    files = sorted(f for f in os.listdir(spark_dir) if f.endswith(".parquet"))
-    sdf = pd.concat([pd.read_parquet(os.path.join(spark_dir, f)) for f in files])
-    odf = odf.reindex(sorted(odf.columns), axis=1).reset_index(drop=True)
-    sdf = sdf.reindex(sorted(sdf.columns), axis=1).reset_index(drop=True)
-    if list(odf.columns) != list(sdf.columns):
-        return f"columns {list(odf.columns)} != {list(sdf.columns)}"
-    if len(odf) != len(sdf):
-        return f"rows {len(odf)} != {len(sdf)}"
-    for c in odf.columns:
-        if odf[c].dtype.kind.replace("u", "i") != sdf[c].dtype.kind.replace("u", "i"):
-            return f"dtype of {c}: {odf[c].dtype} != {sdf[c].dtype}"
-        a, b = odf[c].values, sdf[c].values
-        try:
-            eq = (pd.isna(a) & pd.isna(b)) | (a == b)
-        except Exception:  # noqa: BLE001 - nested values compare as text
-            eq = pd.Series(a).astype(str).values == pd.Series(b).astype(str).values
-        if not np.asarray(eq).all():
-            return f"values of {c} differ"
-    return None
+def compare(out, dumped):
+    """Compare each dumped result (parquet under out/<name>/) with DuckDB's
+    result of its SQL; returns {name: None if equal, else the reason}."""
+    sqls = {n: r["sql"] for n, r in dumped.items() if "error" not in r and r["sql"]}
+    with open(os.path.join(out, "oracle_sql.json"), "w") as fh:
+        json.dump(sqls, fh)
+    report = os.path.join(out, "compare.json")
+    subprocess.run([sys.executable, COMPARE, bench.DATA, out, "--json", report],
+                   stdout=subprocess.DEVNULL, check=False)
+    with open(report) as fh:
+        rep = json.load(fh)
+    return {n: None if rep[n]["hash_match"] else rep[n]["err"] for n in sqls}
 
 
 def dump(cp, workload, extra):
@@ -71,7 +49,7 @@ def dump(cp, workload, extra):
     work = os.path.join(bench.WORK, "pin", workload + "-work")
     os.makedirs(out, exist_ok=True)
     bench.run_jvm(cp, ["--mode", "dump", "--workload", workload, "--data", bench.DATA,
-                       "--work", work, "--out", out] + extra, f"pin-{workload}")
+                       "--work", work, "--out", out] + extra, f"pin-{workload}", 900)
     with open(os.path.join(out, "dump.json")) as fh:
         return out, json.load(fh)
 
@@ -79,19 +57,19 @@ def dump(cp, workload, extra):
 def main():
     os.makedirs(bench.WORK, exist_ok=True)
     cp = bench.build()
-    con = duckdb_con()
     expected = {"data": {}}
     for f in sorted(os.listdir(bench.DATA)):
         with open(os.path.join(bench.DATA, f), "rb") as fh:
             expected["data"][f] = hashlib.sha256(fh.read()).hexdigest()
 
     out, probe = dump(cp, "sql_adhoc", [])
+    diff = compare(out, probe)
     stmts, pins = {}, {}
     for name, r in sorted(probe.items()):
         if "error" in r:
             print(f"sql_adhoc: skip {name}: spark: {r['error'][:120]}")
             continue
-        why = same_result(con, r["sql"], os.path.join(out, name))
+        why = diff[name]
         if why:
             print(f"sql_adhoc: skip {name}: {why}")
             continue
@@ -104,10 +82,10 @@ def main():
     expected["sql_adhoc"] = pins
 
     out, ops = dump(cp, "pipeline_batch", ["--ops", ",".join(bench.PIPELINE_OPS)])
+    diff = compare(out, ops)
     expected["pipeline_batch"] = {}
     for name, r in sorted(ops.items()):
-        why = r.get("error") or (not r["sql"] and "no oracle") or \
-            same_result(con, r["sql"], os.path.join(out, name))
+        why = r.get("error") or (not r["sql"] and "no oracle") or diff[name]
         if why:
             sys.exit(f"pipeline_batch: {name} does not match its oracle: {why}")
         expected["pipeline_batch"][name] = r["hash"]

@@ -2,7 +2,7 @@
 """Print every metric of every workload, with units, sample counts and
 output checks: one untraced and one traced run per workload.
 
-    python3 perfbench/report.py [--seed 1] [--seconds 10]
+    python3 perfbench/report.py [--seed 1] [--seconds 15]
 
 The tracing overhead is printed twice: inside the traced run (its traced
 passes against its own untraced passes, in ABBA order) and across the two
@@ -23,7 +23,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__,
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--seconds", type=float, default=15)
     a = ap.parse_args()
     ok = True
     for w in bench.WORKLOADS:

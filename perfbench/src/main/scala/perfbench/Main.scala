@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JArray, JInt, JObject, JString, JValue}
 
 import graft.SparkEntry
 
@@ -24,10 +25,6 @@ import graft.SparkEntry
   * result as parquet under --out, for pinning against DuckDB.
   */
 object Main {
-  private val minSetups = 3
-  private val maxSetups = 15
-  private val warmSetupSeconds = 2.0
-
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val work = a("work")
@@ -76,36 +73,23 @@ object Main {
     val seed = a("seed").toLong
     val seconds = a("seconds").toDouble
     val traced = a("trace") == "1"
-    val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime.toDouble
     val errors = mutable.ArrayBuffer.empty[String]
     var attempted = 0
     val off = new Tracer // never enabled: untraced windows
     val setupTracer = new Tracer
 
-    // set-up 1 is cold and counts from JVM start; the first op follows it
-    val setups = mutable.ArrayBuffer.empty[Double]
-    def setUp(t0Ms: Double): SparkSession = {
-      val s = session(cpus, work)
-      if (traced) setupTracer.enable(s)
-      wl.setup(s, setupTracer)
-      setupTracer.disable()
-      setups += (System.currentTimeMillis() - t0Ms) / 1e3
-      s
-    }
-    var spark = setUp(jvmStartMs)
+    // cold set-up: from JVM start until the first op can be submitted
+    val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime.toDouble
+    val spark = session(cpus, work)
+    if (traced) setupTracer.enable(spark)
+    wl.setup(spark, setupTracer)
+    setupTracer.disable()
+    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     val firstRec = new Recorder(off)
     wl.first(firstRec)
     val firstResultS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     errors ++= firstRec.errors
     attempted += firstRec.attempted
-    // more warm set-ups when they are cheap, so the median rests on more
-    // samples; sized by the fastest warm set-up, so one stalled set-up
-    // does not cut the series short
-    while (setups.size < minSetups ||
-        (setups.size < maxSetups && setups.tail.min * (setups.size - 1) < warmSetupSeconds)) {
-      stop(spark)
-      spark = setUp(System.currentTimeMillis().toDouble)
-    }
 
     // untimed check pass: every distinct op once; also the warmup
     val checkRec = new Recorder(off)
@@ -123,7 +107,8 @@ object Main {
     val lat = mutable.ArrayBuffer.empty[Double]
     var wallTraced, wallUntraced = 0.0
     var opsTraced, opsUntraced = 0
-    val passWalls = mutable.ArrayBuffer.empty[Double]
+    val passWalls = mutable.ArrayBuffer.empty[Double] // op time only: checks left out
+    val probeBefore = Env.speedProbeMs(cpus)
     val cpu0 = Env.cpu()
     val loadBefore = Env.loadavg()
     for (p <- 0 until passes) {
@@ -132,7 +117,7 @@ object Main {
       val rec = new Recorder(if (tracedPass) passTracer else off)
       val t0 = System.nanoTime()
       wl.pass(rec, rng)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = (System.nanoTime() - t0) / 1e9 - rec.untimedS
       passWalls += wall
       passTracer.disable()
       if (tracedPass) { wallTraced += wall; opsTraced += rec.latencies.size }
@@ -141,12 +126,14 @@ object Main {
       attempted += rec.attempted
     }
     val cpu1 = Env.cpu()
+    val probeAfter = Env.speedProbeMs(cpus)
+    val liveHeapMb = Env.liveHeapMb()
     val windowS = wallTraced + wallUntraced
     stop(spark)
 
     val (tailPct, tail) = Stats.tail(lat.toSeq)
     val endToEnd = mutable.LinkedHashMap[String, Double](
-      "setup_s" -> Stats.median(setups.toSeq),
+      "setup_s" -> setupS,
       "first_result_s" -> firstResultS,
       "throughput_ops_s" -> opsUntraced / wallUntraced,
       "latency_ms.p50" -> Stats.median(lat.toSeq),
@@ -154,6 +141,7 @@ object Main {
       "latency_ms.tail_pct" -> tailPct,
       "latency_ms.n" -> lat.size.toDouble,
       "error_rate" -> errors.size.toDouble / math.max(1, attempted),
+      "heap_live_mb" -> liveHeapMb,
       "rss_peak_mb" -> Env.rssPeakMb()) ++ wl.endToEnd
 
     val layers = mutable.LinkedHashMap.empty[String, Double]
@@ -166,8 +154,8 @@ object Main {
       layers("materialize.sweep_ms") = t.total("materialize.sweep") / ops
       t.selfTimes().foreach { case (layer, ms) => layers(s"self_ms.$layer") = ms / ops }
       layers("unattributed_ms") = layers.getOrElse("self_ms.unattributed", 0.0)
-      layers("catalog.register_ms") = setupTracer.total("catalog") / setups.size
-      layers("catalog.register_jobs") = setupTracer.jobsUnder("catalog").toDouble / setups.size
+      layers("catalog.register_ms") = setupTracer.total("catalog")
+      layers("catalog.register_jobs") = setupTracer.jobsUnder("catalog").toDouble
       layers ++= wl.layerMetrics(t, ops)
       layers("trace.throughput_ops_s") = opsTraced / wallTraced
       layers("trace.untraced_ops_s") = opsUntraced / wallUntraced
@@ -177,19 +165,19 @@ object Main {
       try t.dump(w) finally w.close()
     }
 
-    val env = Env.describe(cpus, seed, passes, setups.size, windowS, cpu0, cpu1) ++
-      Seq("check_s" -> Json.num(checkS), "pass_s" -> passWalls.map(Json.num).mkString("[", ",", "]"),
-        "loadavg_before" -> Json.str(loadBefore), "loadavg_after" -> Json.str(Env.loadavg()))
-    val record = Json.obj(Seq(
-      "attempted" -> attempted.toString,
-      "failed" -> errors.size.toString,
-      "errors" -> Json.arr(errors),
-      "hashes" -> Json.strs(hashes.toSeq.sorted),
+    val env = Env.describe(cpus, seed, passes, windowS, cpu0, cpu1) ++ List(
+      "check_s" -> Json.num(checkS), "pass_s" -> JArray(passWalls.map(Json.num).toList),
+      "speed_probe_ms" -> JArray(List(Json.num(probeBefore), Json.num(probeAfter))),
+      "loadavg_before" -> JString(loadBefore), "loadavg_after" -> JString(Env.loadavg()))
+    val record = JObject(
+      "attempted" -> JInt(attempted),
+      "failed" -> JInt(errors.size),
+      "errors" -> Json.strs(errors),
+      "hashes" -> JObject(hashes.toList.sorted.map { case (k, h) => k -> JString(h) }),
       "end_to_end" -> Json.nums(endToEnd),
       "per_layer" -> Json.nums(layers),
-      "setups_s" -> setups.map(Json.num).mkString("[", ",", "]"),
-      "env" -> Json.obj(env)))
-    Files.writeString(Paths.get(a("out")), record + "\n")
+      "env" -> JObject(env))
+    Files.writeString(Paths.get(a("out")), Json.write(record) + "\n")
   }
 
   /** Write every distinct op's full result as parquet under --out, and
@@ -201,13 +189,13 @@ object Main {
       case w: Dumpable => w.dump(a("out"))
       case _ => sys.error("this workload has no dump")
     }
-    val json = Json.obj(rows.map { case (name, sql, res) =>
-      name -> Json.obj(Seq("sql" -> Json.str(sql)) ++ (res match {
-        case Right(h) => Seq("hash" -> Json.str(h))
-        case Left(e) => Seq("error" -> Json.str(e))
-      }))
+    val json = JObject(rows.toList.map { case (name, sql, res) =>
+      name -> JObject("sql" -> JString(sql), res match {
+        case Right(h) => "hash" -> JString(h)
+        case Left(e) => "error" -> JString(e)
+      })
     })
-    Files.writeString(Paths.get(a("out"), "dump.json"), json + "\n")
+    Files.writeString(Paths.get(a("out"), "dump.json"), Json.write(json) + "\n")
     stop(spark)
   }
 }
@@ -274,6 +262,36 @@ object Env {
     (own, busy)
   }
 
+  /** Heap in use right after a full collection, in MB: what the program
+    * keeps reachable after its ops. The first collection lets Spark's
+    * ContextCleaner drop broadcasts and shuffles whose frames died; the
+    * second one frees what it dropped. */
+  def liveHeapMb(): Double = {
+    System.gc()
+    Thread.sleep(1000)
+    System.gc()
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+  }
+
+  /** Milliseconds a fixed integer loop takes on each of `threads`
+    * threads at once: the machine's speed at the time, so a slow run
+    * shows as one. */
+  def speedProbeMs(threads: Int): Double = {
+    val t0 = System.nanoTime()
+    val ts = (1 to threads).map { k =>
+      val t = new Thread(() => {
+        var x = k.toLong
+        var i = 0
+        while (i < 100000000) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
+        if (x == 42L) println(x) // keeps the loop from being optimised away
+      })
+      t.start()
+      t
+    }
+    ts.foreach(_.join())
+    (System.nanoTime() - t0) / 1e6
+  }
+
   /** VmHWM of this process, in MB. */
   def rssPeakMb(): Double =
     try {
@@ -282,21 +300,20 @@ object Env {
       l.split("\\s+")(1).toDouble / 1024
     } catch { case _: Exception => Double.NaN }
 
-  def describe(cpus: Int, seed: Long, passes: Int, setups: Int, windowS: Double,
-      cpu0: (Double, Double), cpu1: (Double, Double)): Seq[(String, String)] = {
+  def describe(cpus: Int, seed: Long, passes: Int, windowS: Double,
+      cpu0: (Double, Double), cpu1: (Double, Double)): List[(String, JValue)] = {
     val foreign = ((cpu1._2 - cpu0._2) - (cpu1._1 - cpu0._1)) / windowS
-    Seq(
-      "nproc" -> Runtime.getRuntime.availableProcessors.toString,
-      "task_slots" -> cpus.toString,
-      "seed" -> seed.toString,
-      "passes" -> passes.toString,
-      "setups" -> setups.toString,
+    List(
+      "nproc" -> JInt(Runtime.getRuntime.availableProcessors),
+      "task_slots" -> JInt(cpus),
+      "seed" -> JInt(seed),
+      "passes" -> JInt(passes),
       "window_s" -> Json.num(windowS),
       "own_cores_busy" -> Json.num((cpu1._1 - cpu0._1) / windowS),
       "foreign_cores_busy" -> Json.num(math.max(0.0, foreign)),
-      "jvm_flags" -> Json.arr(ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      "jvm_flags" -> Json.strs(ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
         .filterNot(_.startsWith("--add-opens"))),
-      "java_version" -> Json.str(System.getProperty("java.version")),
-      "spark_version" -> Json.str(org.apache.spark.SPARK_VERSION))
+      "java_version" -> JString(System.getProperty("java.version")),
+      "spark_version" -> JString(org.apache.spark.SPARK_VERSION))
   }
 }

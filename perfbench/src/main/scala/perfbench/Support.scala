@@ -60,13 +60,14 @@ object Stats {
       s(lo) + (s(hi) - s(lo)) * (pos - lo)
     }
 
-  /** The highest of a fixed ladder of percentiles that has at least ten
-    * samples beyond it, or the maximum (reported as percentile 100)
-    * when even the median has fewer. Returns (percentile, value). */
+  /** The highest percentile with ten samples beyond it, 100 * (1 - 10 / n),
+    * or the maximum (reported as percentile 100) when there are no more
+    * than ten samples. Returns (percentile, value). */
   def tail(xs: Seq[Double]): (Double, Double) =
-    Seq(99.9, 99.0, 95.0, 90.0, 75.0, 50.0).find(p => xs.size * (1 - p / 100) >= 10) match {
-      case Some(p) => (p, quantile(xs, p / 100))
-      case None => (100.0, if (xs.isEmpty) Double.NaN else xs.max)
+    if (xs.size <= 10) (100.0, if (xs.isEmpty) Double.NaN else xs.max)
+    else {
+      val p = 100 * (1 - 10.0 / xs.size)
+      (p, quantile(xs, p / 100))
     }
 
   /** `<name>.p50`, `<name>.tail`, and the tail's percentile and sample count. */
@@ -77,25 +78,14 @@ object Stats {
   }
 }
 
-/** Flat JSON writing, enough for the run record. */
+/** The run record's JSON, built with json4s. */
 object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods.{compact, render}
 
-  def num(v: Double): String =
-    if (v.isNaN || v.isInfinite) "null" else java.lang.Double.toString(v)
-
-  def obj(fields: Iterable[(String, String)]): String =
-    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
-
-  def nums(m: Iterable[(String, Double)]): String = obj(m.map { case (k, v) => k -> num(v) })
-  def strs(m: Iterable[(String, String)]): String = obj(m.map { case (k, v) => k -> str(v) })
-  def arr(xs: Iterable[String]): String = xs.map(str).mkString("[", ",", "]")
+  /** A number, or null when it is not finite. */
+  def num(v: Double): JValue = if (v.isNaN || v.isInfinite) JNull else JDouble(v)
+  def nums(m: Iterable[(String, Double)]): JValue = JObject(m.map { case (k, v) => k -> num(v) }.toList)
+  def strs(xs: Iterable[String]): JValue = JArray(xs.map(JString(_)).toList)
+  def write(v: JValue): String = compact(render(v))
 }

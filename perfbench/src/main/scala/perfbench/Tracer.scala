@@ -14,6 +14,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleEx
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s.{JInt, JObject, JString}
 
 /** One timed call into a layer. `op` is the closed-loop operation the
   * span belongs to (-1 outside any op), `parent` the span that caused
@@ -224,8 +225,8 @@ final class Tracer {
   def dump(out: java.io.Writer): Unit = {
     def line(kind: String, id: Int, op: Int, parent: Int, layer: String, start: Double,
         end: Double): Unit =
-      out.write(s"""{"$kind":$id,"op":$op,"parent":$parent,"layer":${Json.str(layer)},""" +
-        s""""start_ms":${Json.num(start)},"end_ms":${Json.num(end)}}""" + "\n")
+      out.write(Json.write(JObject(kind -> JInt(id), "op" -> JInt(op), "parent" -> JInt(parent),
+        "layer" -> JString(layer), "start_ms" -> Json.num(start), "end_ms" -> Json.num(end))) + "\n")
     spans.foreach(s => line("span", s.id, s.op, s.parent, s.layer, s.startMs, s.endMs))
     jobs.foreach { case (id, j) => line("job", id, j.op, j.span, "job", j.startMs, j.endMs) }
   }
