@@ -110,6 +110,7 @@ object Main {
     val passWalls = mutable.ArrayBuffer.empty[Double] // op time only: checks left out
     val probeBefore = Env.speedProbeMs(cpus)
     val cpu0 = Env.cpu()
+    val window0 = System.nanoTime()
     val loadBefore = Env.loadavg()
     for (p <- 0 until passes) {
       val tracedPass = traced && (p % 4 == 1 || p % 4 == 2)
@@ -126,6 +127,7 @@ object Main {
       attempted += rec.attempted
     }
     val cpu1 = Env.cpu()
+    val cpuWindowS = (System.nanoTime() - window0) / 1e9 // checks included, like the CPU times
     val probeAfter = Env.speedProbeMs(cpus)
     val liveHeapMb = Env.liveHeapMb()
     val windowS = wallTraced + wallUntraced
@@ -165,7 +167,7 @@ object Main {
       try t.dump(w) finally w.close()
     }
 
-    val env = Env.describe(cpus, seed, passes, windowS, cpu0, cpu1) ++ List(
+    val env = Env.describe(cpus, seed, passes, windowS, cpuWindowS, cpu0, cpu1) ++ List(
       "check_s" -> Json.num(checkS), "pass_s" -> JArray(passWalls.map(Json.num).toList),
       "speed_probe_ms" -> JArray(List(Json.num(probeBefore), Json.num(probeAfter))),
       "loadavg_before" -> JString(loadBefore), "loadavg_after" -> JString(Env.loadavg()))
@@ -300,16 +302,16 @@ object Env {
       l.split("\\s+")(1).toDouble / 1024
     } catch { case _: Exception => Double.NaN }
 
-  def describe(cpus: Int, seed: Long, passes: Int, windowS: Double,
+  def describe(cpus: Int, seed: Long, passes: Int, windowS: Double, cpuWindowS: Double,
       cpu0: (Double, Double), cpu1: (Double, Double)): List[(String, JValue)] = {
-    val foreign = ((cpu1._2 - cpu0._2) - (cpu1._1 - cpu0._1)) / windowS
+    val foreign = ((cpu1._2 - cpu0._2) - (cpu1._1 - cpu0._1)) / cpuWindowS
     List(
       "nproc" -> JInt(Runtime.getRuntime.availableProcessors),
       "task_slots" -> JInt(cpus),
       "seed" -> JInt(seed),
       "passes" -> JInt(passes),
       "window_s" -> Json.num(windowS),
-      "own_cores_busy" -> Json.num((cpu1._1 - cpu0._1) / windowS),
+      "own_cores_busy" -> Json.num((cpu1._1 - cpu0._1) / cpuWindowS),
       "foreign_cores_busy" -> Json.num(math.max(0.0, foreign)),
       "jvm_flags" -> Json.strs(ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
         .filterNot(_.startsWith("--add-opens"))),

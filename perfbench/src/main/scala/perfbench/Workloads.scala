@@ -56,9 +56,8 @@ trait Workload {
   /** A run makes round(seconds / secondsPerPass) passes, so every run of
     * a given length does the same work and reports over the same number
     * of samples. A share of the run's seconds, set with the benchmark
-    * so that a whole run fits its time: sql_adhoc's cold set-up and
-    * check pass are long, so its passes count for more seconds, and
-    * ingest_mixed makes one long pass. */
+    * so that a whole run fits its time: ingest_mixed makes one long
+    * pass. */
   def secondsPerPass: Double
   def setup(spark: SparkSession, t: Tracer): Unit
   def first(rec: Recorder): Unit
@@ -78,7 +77,7 @@ trait Workload {
   * Formatters.markdown. */
 final class SqlAdhoc(data: String, stmts: Seq[(String, String)], tables: Seq[String])
     extends Workload with Dumpable {
-  val secondsPerPass = 6.5
+  val secondsPerPass = 5.0
   private var engine: QueryEngine = _
   private val rendered = mutable.HashMap.empty[String, String]
   private val text = stmts.toMap
