@@ -265,14 +265,29 @@ object Env {
   }
 
   /** Heap in use right after a full collection, in MB: what the program
-    * keeps reachable after its ops. The first collection lets Spark's
-    * ContextCleaner drop broadcasts and shuffles whose frames died; the
-    * second one frees what it dropped. */
+    * keeps reachable after its ops. What the ops leave behind is freed in
+    * steps: a collection clears the weak references of dead frames,
+    * Spark's ContextCleaner then drops the broadcasts and shuffles they
+    * tracked, and a later collection frees those. How many collections
+    * that takes varies from run to run (on pipeline_batch some 20 MB of
+    * long[] outlived two of them in a third of the runs), so collections
+    * repeat, 300 ms apart, until two in a row read within 0.5 MB of each
+    * other: at least four, at most twelve. */
   def liveHeapMb(): Double = {
-    System.gc()
-    Thread.sleep(1000)
-    System.gc()
-    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    def collected(): Double = {
+      System.gc()
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    }
+    var prev = collected()
+    var cur = prev
+    var n = 1
+    while (n < 4 || (math.abs(prev - cur) > 0.5 && n < 12)) {
+      Thread.sleep(300)
+      prev = cur
+      cur = collected()
+      n += 1
+    }
+    cur
   }
 
   /** Milliseconds a fixed integer loop takes on each of `threads`
