@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, LogicalPlan, Window => LWindow}
 
 /** OPTIMIZATION-ROUND DIAGNOSTIC (r16, guide §1/§2.4): for every declared
@@ -16,8 +15,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, L
   * simpleString — the measure-first census that decides where staging
   * (Materialize.stage) is worth its checkpoint write.
   *
-  * Dev/diagnostic main only — not part of the driver contract; never run
-  * by Bench/Verify.
+  * Diagnostic only (`graft.tools.Diag audit`) — not part of the driver
+  * contract; never run by Bench/Verify.
   */
 object PlanAudit {
 
@@ -26,58 +25,36 @@ object PlanAudit {
     case _: LWindow => (); case _: Generate => ()
   }.isDefined
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val only = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.optimizedPlan
-        val counts = scala.collection.mutable.HashMap
-          .empty[LogicalPlan, (Int, LogicalPlan)]
-        plan.foreach { node =>
-          val k = node.canonicalized
-          val (c, rep) = counts.getOrElse(k, (0, node))
-          counts(k) = (c + 1, rep)
-        }
-        // maximal duplicated expensive subtrees: drop any duplicate whose
-        // representative is a strict descendant of another duplicate with
-        // the same occurrence count (those are just the parent's children)
-        val dups = counts.values.toSeq
-          .filter { case (c, rep) => c >= 2 && expensive(rep) }
-        val maximal = dups.filterNot { case (c, rep) =>
-          dups.exists { case (c2, rep2) =>
-            (rep2 ne rep) && c2 >= c && rep2.exists(_ eq rep)
-          }
-        }
-        maximal.sortBy { case (_, rep) => -rep.collect { case x => x }.size }
-          .take(3).foreach { case (c, rep) =>
-            val size = rep.collect { case x => x }.size
-            val joins = rep.collect { case j: Join => j }.size
-            val aggs = rep.collect { case a: Aggregate => a }.size
-            val gens = rep.collect { case g: Generate => g }.size
-            val wins = rep.collect { case w: LWindow => w }.size
-            println(s"[audit] $name x$c nodes=$size joins=$joins aggs=$aggs " +
-              s"gen=$gens win=$wins root=${rep.simpleString(60).take(140)}")
-          }
-        if (maximal.isEmpty) println(s"[audit] $name clean")
-      } catch {
-        case e: Throwable =>
-          println(s"[audit] $name ERROR ${e.getClass.getSimpleName}: " +
-            s"${Option(e.getMessage).getOrElse("").take(120)}")
+  /** One `[audit]` line per maximal duplicated expensive subtree of
+    * `plan` (the three largest), or one `clean` line. */
+  def report(name: String, plan: LogicalPlan): Seq[String] = {
+    val counts = scala.collection.mutable.HashMap
+      .empty[LogicalPlan, (Int, LogicalPlan)]
+    plan.foreach { node =>
+      val k = node.canonicalized
+      val (c, rep) = counts.getOrElse(k, (0, node))
+      counts(k) = (c + 1, rep)
+    }
+    // maximal duplicated expensive subtrees: drop any duplicate whose
+    // representative is a strict descendant of another duplicate with
+    // the same occurrence count (those are just the parent's children)
+    val dups = counts.values.toSeq
+      .filter { case (c, rep) => c >= 2 && expensive(rep) }
+    val maximal = dups.filterNot { case (c, rep) =>
+      dups.exists { case (c2, rep2) =>
+        (rep2 ne rep) && c2 >= c && rep2.exists(_ eq rep)
       }
     }
-    spark.stop()
+    if (maximal.isEmpty) Seq(s"[audit] $name clean")
+    else maximal.sortBy { case (_, rep) => -rep.collect { case x => x }.size }
+      .take(3).map { case (c, rep) =>
+        val size = rep.collect { case x => x }.size
+        val joins = rep.collect { case j: Join => j }.size
+        val aggs = rep.collect { case a: Aggregate => a }.size
+        val gens = rep.collect { case g: Generate => g }.size
+        val wins = rep.collect { case w: LWindow => w }.size
+        s"[audit] $name x$c nodes=$size joins=$joins aggs=$aggs " +
+          s"gen=$gens win=$wins root=${rep.simpleString(60).take(140)}"
+      }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.plans.GraftExtensions
 import graft.queries.{Core, Warehouse}
 import graft.ext.{Dedup, Multimodal, Similarity, TextOps}
 import graft.sources.Formats
@@ -30,11 +31,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Core.q3TopRevenue(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ extensions). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Core.queries ++ Warehouse.queries ++ Dedup.queries ++ Similarity.queries ++
+  /** One entry per implemented operator from SURVEY.md §2 (+ extensions).
+    * Each entry first installs graft's extensions on the session it is
+    * handed, so callers may bring any session (the driver contract).
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (Core.queries ++ Warehouse.queries ++ Dedup.queries ++ Similarity.queries ++
       TextOps.queries ++ Multimodal.queries ++ Events.queries ++ Formats.queries ++
-      graft.format.CliGolden.queries
+      graft.format.CliGolden.queries).map { case (name, q) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        GraftExtensions.register(spark)
+        q(spark, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. EVERY query is oracle-checked — including

@@ -32,25 +32,9 @@ import graft.format.Formatters
   */
 object Repl {
 
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-sql")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // plain SQL in the shell gets the native functions (cosine_f32 /
-    // sign_lsh / shingle_hashes / topk_by …) and the approx-NDV rewrite
-    // flag; the as-of strategy is registered for code that reuses this
-    // session through the typed Asof API (no SQL syntax reaches it)
-    graft.plans.GraftExtensions.register(s)
-    graft.ops.Asof.register(s)
-    graft.plans.ApproxNdvRule.register(s)
-    graft.plans.NativeTextRewriteRule.register(s)
-    s
-  }
+  /** A [[graft.engine.Sessions]] session; `SPARK_MASTER` points the
+    * shell at a cluster instead of the local master. */
+  def session(): SparkSession = graft.engine.Sessions.create(sys.env.get("SPARK_MASTER"))
 
   def main(args: Array[String]): Unit = {
     var sqlArg: Option[String] = None

@@ -229,25 +229,4 @@ object MvAdvisor {
     require(cut > 0 && p.endsWith(".parquet"), s"not a table root path: $p")
     (p.substring(0, cut), p.substring(cut + 1).stripSuffix(".parquet"))
   }
-
-  /** CLI entry: `runMain graft.engine.MvAdvisor <sfDir> <query...>` —
-    * prints the view candidates for the named SparkEntry queries.
-    */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val frames = names.map(n => n -> graft.SparkEntry.queries(n)(spark, sfDir)).toMap
-    advise(frames).foreach { c =>
-      println(s"[mv-advisor] base=${c.base} dims=${c.dims.mkString(",")} " +
-        s"aggs=${c.aggs.mkString(";")} queries=${c.queries.mkString(",")}")
-    }
-    spark.stop()
-  }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Workload-level common-subexpression analysis — the first half of the
@@ -61,26 +61,5 @@ object WorkloadCse {
       }
       .filter(_._2.size >= minQueries)
       .sortBy { case (fp, _, _, savings) => (-savings, fp) }
-  }
-
-  /** CLI entry: `runMain graft.engine.WorkloadCse <sfDir> <query...>` —
-    * prints the shared-subplan report for the named SparkEntry queries.
-    */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val frames = names.map(n => n -> graft.SparkEntry.queries(n)(spark, sfDir)).toMap
-    report(frames, minNodes = 3, minQueries = 2).take(20).foreach {
-      case (fp, queries, n, savings) =>
-        println(s"[cse] $fp nodes=$n savings=$savings queries=${queries.mkString(",")}")
-    }
-    spark.stop()
   }
 }

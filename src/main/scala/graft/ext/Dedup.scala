@@ -42,7 +42,6 @@ object Dedup {
     * odds n²/2⁶⁵ — nil at any sf).
     */
   private def shingleSets(docs: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     // Materialized once (Materialize.stage): every consumer branches this
     // frame 2–4 ways (inverted index + sizes, bands + verify sets), and
     // without a materialization point Spark would recompute the scan +
@@ -524,7 +523,6 @@ object Dedup {
     clusterSplitOn(docs(spark, dir))
 
   def clusterSplitOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     // staged: both the clustering and the zero-leak census consume the
     // pair graph — without a cut the inverted-index join runs twice
     // (6.1 s → 5.3 s at sf0.1, the remainder being the clustering
@@ -669,7 +667,6 @@ object Dedup {
     simhashOn(docs(spark, dir))
 
   def simhashOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     // The whole signature is one scan-side native expression
     // (graft.functions.SimHash64): tokenize, hash, majority-bit in a
     // single per-document pass — no explode, no aggregation, no shuffle
@@ -710,7 +707,6 @@ object Dedup {
     simhashWideOn(docs(spark, dir))
 
   def simhashWideOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val d = documents.select(col("doc_id"), expr("simhash64(text)").as("sim"))
     val eighth = (i: Int) => s"(shiftright(sim, ${i * 8}) & 255L)"
     val pairKeys = for { i <- 0 until 8; j <- i + 1 until 8 } yield
@@ -2364,7 +2360,6 @@ object Dedup {
     splitByClusterOn(docs(spark, dir))
 
   def splitByClusterOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     // the pair graph feeds BOTH the CC labels and the leak audit —
     // staged once (unstaged, the inverted-index join ran twice: 10×
     // blowup measured 31.4 → 21.0 s; 1× is CC-round dominated either way)

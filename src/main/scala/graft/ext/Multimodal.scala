@@ -221,7 +221,6 @@ object Multimodal {
     mediaHistTopKOn(docsAsMedia(spark, dir).toDF(), nQueries = 10, k = 5)
 
   def mediaHistTopKOn(media: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(media.sparkSession)
     import org.apache.spark.sql.expressions.{Window => W}
     val dot = (a: String, b: String) =>
       s"aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)), cast(0.0 as double), (acc, v) -> acc + v)"
@@ -299,7 +298,6 @@ object Multimodal {
     mediaEntropyOn(docsAsMedia(spark, dir).toDF())
 
   def mediaEntropyOn(media: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(media.sparkSession)
     val lnfp = (x: String) => s"cast(round(ln(cast($x as double)) * 1000000.0d) as bigint)"
     media
       .select(col("media_id"), col("payload"))
@@ -513,7 +511,6 @@ object Multimodal {
     // HUGEINT replay in the oracle) only holds for a power-of-two mask
     require(mask > 0 && (mask & (mask - 1)) == 0,
       s"CDC mask must be a positive power of two, got $mask")
-    graft.plans.GraftExtensions.register(media.sparkSession)
     val base = media
       .select(col("media_id"), col("payload"))
       .withColumn("n", length(col("payload")))
@@ -636,7 +633,6 @@ object Multimodal {
       quiet = 4000000000L)
 
   def audioEnergyOn(media: DataFrame, win: Int, quiet: Long): DataFrame = {
-    graft.plans.GraftExtensions.register(media.sparkSession)
     media
       .select(col("media_id"), col("payload"))
       .withColumn("n", length(col("payload")).cast("long"))
@@ -760,7 +756,6 @@ object Multimodal {
     energyCutsOn(docsAsMedia(spark, dir).toDF(), win = 16)
 
   def energyCutsOn(media: DataFrame, win: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(media.sparkSession)
     media
       .select(col("media_id"), col("payload"))
       .filter(length(col("payload")) >= 2)
@@ -980,7 +975,6 @@ object Multimodal {
     * self-joins.
     */
   def alignment(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val d = Tables.load(spark, dir, "documents")
     val e = Tables.load(spark, dir, "embeddings")
     val counts = d.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
@@ -1286,7 +1280,6 @@ object Multimodal {
   }
 
   def mediaPhashDedupOn(media: DataFrame, tau: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(media.sparkSession)
     require(tau <= 7,
       s"4x16-bit word-variant search is exact only to Hamming 7, got $tau")
     // bit k (k = r*8+c): grid cell (r, c) vs its right neighbor — rows of

@@ -39,10 +39,7 @@ object Similarity {
   /** Cosine via the native codegen expression (graft.functions.CosineSimF32)
     * — bit-identical to the sequential double fold but whole-stage-codegen'd.
     */
-  private def cosine(df: DataFrame): org.apache.spark.sql.Column = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
-    expr("cosine_f32(qe, ce)")
-  }
+  private def cosine: org.apache.spark.sql.Column = expr("cosine_f32(qe, ce)")
 
   // ------------------------------------------------------- brute force
   /** Exact cosine top-5 neighbors for query vectors vec_id < 10. */
@@ -54,7 +51,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
     val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
@@ -86,7 +83,6 @@ object Similarity {
     * ADVICE r1).
     */
   private[graft] def banded(e: DataFrame, nBands: Int, bandBits: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     // Band b's key is the sign pattern of planes [b·bits, (b+1)·bits) —
     // computed per band via the plane-offset form of sign_lsh, so the
     // total signature width nBands × bandBits is NOT capped at 64. Bits
@@ -122,7 +118,7 @@ object Similarity {
           col("qid") =!= col("cid"))
       .select(col("qid"), col("qe"), col("cid"), col("ce"))
       .dropDuplicates("qid", "cid")
-    val scored = cand.withColumn("cos", cosine(e))
+    val scored = cand.withColumn("cos", cosine)
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
@@ -161,7 +157,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("ce")), "cid")
       .join(broadcast(e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))), "qid")
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .select(col("qid").as("vec_id"), col("cid").as("neighbor_id"),
         round(col("cos"), 6).as("cos_sim"))
@@ -200,7 +196,7 @@ object Similarity {
     val ea = e.select(col("vec_id").as("va"), col("embedding").as("qe"))
     val eb = e.select(col("vec_id").as("vb"), col("embedding").as("ce"))
     cand.join(ea, "va").join(eb, "vb")
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .filter(col("cos") >= tau)
       .select(col("va").as("doc_a"), col("vb").as("doc_b"), round(col("cos"), 6).as("cos_sim"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -302,7 +298,6 @@ object Similarity {
     * exactly like the KMeans loop.
     */
   private def farthestPointSeeds(vfp: DataFrame, nSeeds: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(vfp.sparkSession)
     var seeds = vfp
       .withColumn("h", expr("mix64(vec_id)"))
       .orderBy(col("h"), col("vec_id")).limit(1)
@@ -358,7 +353,6 @@ object Similarity {
     * ([[annIvfCached]] grades the full save→load→probe loop).
     */
   def ivfTrain(init: DataFrame, iters: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(init.sparkSession)
     val distExpr = ivfDistExpr
     var assign = init
     for (_ <- 1 to iters) {
@@ -384,7 +378,6 @@ object Similarity {
   def ivfProbe(e: DataFrame, assign: DataFrame, nQueries: Int, k: Int,
       nprobe: Int, centOverride: Option[DataFrame] = None,
       candAssign: Option[DataFrame] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val distExpr = ivfDistExpr
     val cent = centOverride.getOrElse(cellCentroids(assign))
     // rank cells per query by fixed-point L2 to the trained centroids,
@@ -406,7 +399,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("ce")), "cid")
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     c.join(broadcast(probed), col("cell") === col("ccell") && col("qid") =!= col("cid"))
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("qid").as("vec_id"), col("cid").as("neighbor_id"),
@@ -424,7 +417,6 @@ object Similarity {
     * stream ≡ batch.
     */
   def ivfAssignFrozen(newVecs: DataFrame, cent: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(newVecs.sparkSession)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("ccell"))
     newVecs.select(col("vec_id"), expr(vfpExpr).as("vfp"))
       .crossJoin(broadcast(cent))
@@ -882,7 +874,7 @@ object Similarity {
     val exact = e.filter(expr("label % 5 = 0"))
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
       .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .withColumn("rn", row_number().over(wEx))
       .filter(col("rn") <= k)
       .select(col("qid"), col("cid"))
@@ -1267,7 +1259,6 @@ object Similarity {
 
   def jlProjectOn(e: DataFrame, kDim: Int, nPairs: Int): DataFrame = {
     val spark = e.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
     // the frozen sign matrix: kDim rows (j, 64-long sign vector), packed
     // to one broadcast row — rebuilt, never stored (it IS its seed)
@@ -1555,7 +1546,6 @@ object Similarity {
     annIvfPqFixtureProbe(spark, dir)
 
   private def annIvfPqFixtureProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val fx = pqFixture(spark, dir, None, iters = 2, pqIters = 2, nSub = 16,
       subDim = 4, nCodes = 32)
     ivfPqProbeTail(spark.read.parquet(fx.assign), spark.read.parquet(fx.cent),
@@ -1566,7 +1556,6 @@ object Similarity {
   def annIvfPqOn(e: DataFrame, iters: Int, pqIters: Int, nQueries: Int,
       k: Int, nprobe: Int, nSub: Int, subDim: Int, nCodes: Int,
       rerank: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     // ---- coarse trainer: label-seeded cells, truncated-division KMeans
     val assign = ivfTrain(e.select(col("vec_id"), col("label").as("cell"),
       expr(vfpExpr).as("vfp")), iters)
@@ -2012,7 +2001,6 @@ object Similarity {
     */
   private def annIvfPqRecallWith(e: DataFrame, approxDf: DataFrame,
       nQueries: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val approx = approxDf
       .select(col("vec_id"), col("neighbor_id"), lit(1L).as("hit"))
     val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
@@ -2897,7 +2885,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("ce")), "cid")
     val sc = c.join(broadcast(probed),
         col("cell") === col("ccell") && col("qid") =!= col("cid"))
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .select(col("qid"), col("cid"), col("cr"), col("cos"))
     val nps = Seq(1L, 2L, 4L).toDF("np")
     val wNp = Window.partitionBy(col("qid"), col("np"))
@@ -3118,7 +3106,7 @@ object Similarity {
     val ea = e.select(col("vec_id").as("va"), col("embedding").as("qe"))
     val eb = e.select(col("vec_id").as("vb"), col("embedding").as("ce"))
     cand.join(ea, "va").join(eb, "vb")
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .groupBy(col("va"))
       .agg(expr(s"topk_by(cos, vb, $k)").as("top"))
       .select(col("va"), posexplode(col("top")).as(Seq("pos", "x")))
@@ -3968,7 +3956,6 @@ object Similarity {
 
   def mmrDiversifyOn(e: DataFrame, nQueries: Int, poolN: Int,
       k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -4099,7 +4086,6 @@ object Similarity {
 
   def annGraphSearchOn(e: DataFrame, degree: Int, nQueries: Int, hops: Int,
       beam: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     // the fixed-point corpus materializes ONCE: the walk is iterative,
     // and without this every hop's candidate-scoring join re-read the
     // parquet and re-ran the 64-lane float→fp transform — at 10× that
@@ -4236,7 +4222,6 @@ object Similarity {
 
   def annGraphSearchRecallOn(e: DataFrame, degree: Int, nQueries: Int,
       hops: Int, beam: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val approx = annGraphSearchOn(e, degree, nQueries, hops, beam, k)
       .select(col("vec_id"), col("neighbor_id")).withColumn("hit", lit(1L))
     val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
@@ -4294,7 +4279,6 @@ object Similarity {
     dominantDirectionOn(emb(spark, dir), iters = 3)
 
   def dominantDirectionOn(e: DataFrame, iters: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
     powerIterOn(vfp, iters)
       .select(col("d").cast("long").as("dim"), col("v").as("dir_fp"))
@@ -4383,7 +4367,6 @@ object Similarity {
     pcaDeflateOn(emb(spark, dir), iters = 3)
 
   def pcaDeflateOn(e: DataFrame, iters: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
     val v1 = powerIterOn(vfp, iters) // localCheckpointed by its last round
     val v1l = v1.groupBy()
@@ -4537,7 +4520,7 @@ object Similarity {
     val ea = e.select(col("vec_id").as("va"), col("embedding").as("qe"))
     val eb = e.select(col("vec_id").as("vb"), col("embedding").as("ce"))
     val scored = cand.join(ea, "va").join(eb, "vb")
-      .withColumn("cos", cosine(e)).select(col("va"), col("vb"), col("cos"))
+      .withColumn("cos", cosine).select(col("va"), col("vb"), col("cos"))
     val grid = e.sparkSession.range(3, 9)
       .select((col("id") * 1000).cast("long").as("tau_bp"))
     val agg = scored.crossJoin(broadcast(grid))
@@ -4689,7 +4672,7 @@ object Similarity {
     val ea = e.select(col("vec_id").as("va"), col("embedding").as("qe"))
     val eb = e.select(col("vec_id").as("vb"), col("embedding").as("ce"))
     cand.join(ea, "va").join(eb, "vb")
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .filter(col("cos") >= tau)
       .select(col("va").as("doc_a"), col("vb").as("doc_b"),
         round(col("cos"), 6).as("cos_sim"))
@@ -4733,7 +4716,7 @@ object Similarity {
     val ea = sub.select(col("vec_id").as("va"), col("embedding").as("qe"))
     val eb = sub.select(col("vec_id").as("vb"), col("embedding").as("ce"))
     val exact = ea.crossJoin(broadcast(eb)).filter(col("va") < col("vb"))
-      .withColumn("cos", cosine(e)).filter(col("cos") >= 0.35)
+      .withColumn("cos", cosine).filter(col("cos") >= 0.35)
       .select(col("va"), col("vb"))
     val mp = cosineNearDupMpOn(sub, 0.35, 16, 8)
       .select(col("doc_a").as("va"), col("doc_b").as("vb"))
@@ -4800,7 +4783,6 @@ object Similarity {
 
   def binaryRerankOn(e: DataFrame, nQueries: Int, shortlist: Int,
       k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(e.sparkSession)
     val coded = e.select(col("vec_id"), col("embedding"),
       expr("sign_lsh(embedding, 0, 48)").as("code"))
     val q = coded.filter(col("vec_id") < nQueries)
@@ -4817,7 +4799,7 @@ object Similarity {
     short
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("ce")), "cid")
       .join(broadcast(q.select(col("qid"), col("qe"))), "qid")
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .withColumn("rn2", row_number().over(wC)).filter(col("rn2") <= k)
       .select(col("qid").as("vec_id"), col("cid").as("neighbor_id"),
         col("h").cast("long").as("hamming"), round(col("cos"), 6).as("cos_sim"))
@@ -4866,7 +4848,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val scored = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
       .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", cosine(e))
+      .withColumn("cos", cosine)
       .orderBy(col("cos").desc, col("cid")).limit(20)
     val sem = scored
       .withColumn("sem_rank",

@@ -45,7 +45,6 @@ object TextOps {
   private def meanTokLenCol = expr("sum_strlen(w)").cast("double") / size(col("w"))
 
   def statsOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     documents
       .withColumn("w", split(col("text"), " "))
       .select(
@@ -92,7 +91,6 @@ object TextOps {
     qualityScoreOn(docs(spark, dir))
 
   def qualityScoreOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     documents
       .withColumn("w", split(col("text"), " "))
       .withColumn("n_tokens", size(col("w")).cast("double"))
@@ -421,7 +419,6 @@ object TextOps {
 
   def winnowPairsOn(documents: DataFrame, k: Int, w: Int, tau: Double,
       dfCap: Long, minShared: Long): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val fps0 = graft.engine.Materialize.stage(
       documents.select(col("doc_id"),
         explode(expr(s"winnow_hashes(text, $k, $w)")).as("fp")))
@@ -570,7 +567,6 @@ object TextOps {
     langIdOn(docs(spark, dir))
 
   def langIdOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val base = documents.withColumn("w", split(col("text"), " "))
     val scored = profiles.foldLeft(base) { case (df, (lang, words)) =>
       df.withColumn(s"score_$lang",
@@ -650,7 +646,6 @@ object TextOps {
     // `aggregate(split(text,''), 0L, (acc,c) -> (acc*31+ascii(c)) % 1e9+7)`
     // into one codegen call — the worst interpreted loop in the family
     // (a lambda dispatch per character, not per token).
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     documents
       .select(
         col("doc_id"),
@@ -677,7 +672,6 @@ object TextOps {
     * exchange in every consumer is its own (post-filter) aggregation.
     */
   private def bigrams(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     documents.select(col("doc_id"),
       explode(expr("word_ngrams(text, 2)")).as("ngram"))
   }
@@ -743,7 +737,6 @@ object TextOps {
     */
   def contaminationBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val probes = probePhrases.toDF("probe")
     // distributed bloom build (tiny here; the API point is that it isn't
     // a driver-side loop when the probe table is 10⁸ rows)
@@ -1012,7 +1005,6 @@ object TextOps {
     * hash-threshold filter in the scan; no window, no sort, no state).
     */
   def mixApply(docs: DataFrame, thresholds: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs.join(broadcast(thresholds), Seq("lang"))
       .filter(expr("pmod(mix64(doc_id), 1048576)") < col("t"))
   }
@@ -1086,7 +1078,6 @@ object TextOps {
     * adds the sort.
     */
   def classifierScoreOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     documents
       .withColumn("grams", expr("word_ngrams(text, 2)"))
       .select(
@@ -1456,7 +1447,6 @@ object TextOps {
     shardShuffleOn(docs(spark, dir), nShards = 8)
 
   def shardShuffleOn(documents: DataFrame, nShards: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("okey"), col("doc_id"))
     documents
@@ -1511,7 +1501,6 @@ object TextOps {
     // the oracle partitions by raw text and hash-matches).
     val wDup = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text").cast("binary"))).orderBy(col("doc_id"))
-    graft.plans.GraftExtensions.register(spark)
     docs(spark, dir)
       .withColumn("w", split(col("text"), " "))
       .withColumn("n_tokens", size(col("w")).cast("long"))
@@ -1744,7 +1733,6 @@ object TextOps {
     * the (vocabulary-sized) survivor set does.
     */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val toks = docs(spark, dir)
       .select(explode(split(col("text"), " ")).as("token"))
     val cms = toks.stat.countMinSketch("token", 0.0001, 0.999, 42)
@@ -2077,7 +2065,6 @@ object TextOps {
     * identical composition as DuckDB CTEs, hash-matched end to end.
     */
   def curate(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val wDup = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text").cast("binary"))).orderBy(col("doc_id"))
     val survivors = docs(spark, dir)
@@ -2207,7 +2194,6 @@ object TextOps {
     spanCorruptOn(docs(spark, dir))
 
   def spanCorruptOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val w3 = w.rowsBetween(-2, Window.currentRow)
@@ -2291,7 +2277,6 @@ object TextOps {
     healthOn(docs(spark, dir))
 
   def healthOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val wDup = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text").cast("binary")))
     documents
@@ -2492,7 +2477,6 @@ object TextOps {
     gopherRulesOn(docs(spark, dir))
 
   def gopherRulesOn(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val d = documents.withColumn("w", split(col("text"), " "))
     val scan = d.select(
       col("doc_id"),
@@ -3159,7 +3143,6 @@ object TextOps {
   /** The apply half — batch or streaming alike (stateless: broadcast
     * the |sources|-row plan, per-row integer copy count). */
   def tokenBudgetApplyWith(docs: DataFrame, plan: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"), col("source"))
       .join(broadcast(plan), "source")
       .select(col("doc_id"), col("source"),

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.plans.{AsofJoinPlan, AsofJoinStrategy}
+import graft.plans.AsofJoinPlan
 
 /** Public API for the native as-of join operator (graft.plans.AsofJoinExec).
   *
@@ -12,13 +12,6 @@ import graft.plans.{AsofJoinPlan, AsofJoinStrategy}
   * o_orderdate ≤ ts per key (inner semantics).
   */
 object Asof {
-
-  /** Idempotently register the planner strategy on the session. */
-  def register(spark: SparkSession): Unit = {
-    val es = spark.experimental
-    if (!es.extraStrategies.contains(AsofJoinStrategy))
-      es.extraStrategies = es.extraStrategies :+ AsofJoinStrategy
-  }
 
   /** ASOF LEFT JOIN: unmatched left rows are kept and null-extended
     * (DuckDB `ASOF LEFT JOIN` semantics).
@@ -103,7 +96,6 @@ object Asof {
       tolerance: Option[Long] = None,
       isForward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val lp = left.queryExecution.analyzed
     val rpRaw = right.queryExecution.analyzed
     // Self-join / shared-lineage dedup: Spark's analyzer rewrites duplicate

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -36,11 +35,4 @@ object ApproxNdvRule extends Rule[LogicalPlan] {
           aggregateFunction = HyperLogLogPlusPlus(c.children.head),
           isDistinct = false)
     }
-
-  /** Idempotently attach to a live session via experimental methods. */
-  def register(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(ApproxNdvRule))
-      ex.extraOptimizations = ex.extraOptimizations :+ ApproxNdvRule
-  }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -48,11 +47,4 @@ object ApproxPercentileRule extends Rule[LogicalPlan] {
           p.children.head, p.children(1),
           Literal(ApproximatePercentile.DEFAULT_PERCENTILE_ACCURACY), 0, 0))
     }
-
-  /** Idempotently attach to a live session via experimental methods. */
-  def register(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(ApproxPercentileRule))
-      ex.extraOptimizations = ex.extraOptimizations :+ ApproxPercentileRule
-  }
 }

@@ -69,8 +69,8 @@ case class AsofJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy lowering the logical node (inject via
-  * `spark.experimental.extraStrategies` or SparkSessionExtensions).
+/** Planner strategy lowering the logical node (installed by
+  * [[GraftExtensions]]).
   */
 object AsofJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -4,24 +4,30 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 import graft.functions.{BloomMightContain, CmsEstimate, CosineSimF32, CountInSet, DotProductF32, MinHashArr, MinHashSigAgg, Mix64, RollHash31, ShingleHashes, SignLsh, SimHash64, SimHashSigAgg, SumStrLen, TopKByAgg, WordNgrams}
 
-/** SparkSessionExtensions injector for graft's native expressions —
-  * enable with `spark.sql.extensions=graft.plans.GraftExtensions`, or
-  * call [[GraftExtensions.register]] on an existing session (idempotent;
-  * used by the operators themselves so any session works).
+/** SparkSessionExtensions injector for graft's native functions,
+  * optimizer rules and planner strategy.
+  *
+  * Session contract: graft's operators assume every extension point is
+  * installed on the session they run on. A session gets them in one of
+  * three ways:
+  *  - build it with [[graft.engine.Sessions.create]];
+  *  - set `spark.sql.extensions=graft.plans.GraftExtensions` before the
+  *    session is created (the cluster path);
+  *  - call [[GraftExtensions.register]] once on an existing session.
+  * [[graft.SparkEntry.queries]] and [[graft.sqlapi.QueryEngine]] call
+  * `register` themselves, so those two front doors accept any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      ext.injectFunction((ident, info, builder))
-    }
-    ext.injectOptimizerRule(_ => ApproxNdvRule)
-    ext.injectOptimizerRule(_ => ApproxPercentileRule)
-    ext.injectOptimizerRule(_ => NativeTextRewriteRule)
-    ext.injectOptimizerRule(_ => MvRewriteRule)
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -111,18 +117,25 @@ object GraftExtensions {
         "pcm16_energy(payload, win) - per-window exact energy of little-endian int16 PCM"),
       (es: Seq[Expression]) => graft.functions.Pcm16Energy(es(0), es(1))))
 
-  // sessions already registered — operators call register() defensively
-  // on every invocation, and re-registering logs one WARN per function
-  // ("replaced a previously registered function"), flooding bench logs.
+  /** Optimizer rules, in the order they run. */
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(ApproxNdvRule, ApproxPercentileRule, NativeTextRewriteRule, MvRewriteRule)
+
+  val strategies: Seq[SparkStrategy] = Seq(AsofJoinStrategy)
+
+  // Sessions already registered: re-registering a function logs one WARN
+  // per function ("replaced a previously registered function").
   // Weak keys: a dropped session must not be pinned by this cache.
   private val registered = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Register on an already-built session (temp functions, idempotent —
-    * and quiet: repeat calls on the same session are no-ops).
+  /** Install every function, rule and strategy on an already-built
+    * session (temp functions; idempotent and quiet: repeat calls on the
+    * same session are no-ops, and a rule or strategy already present is
+    * not added twice).
     * Registration runs INSIDE computeIfAbsent (SynchronizedMap holds its
     * mutex across the mapping function): a concurrent second caller
-    * blocks until the functions actually exist rather than racing past a
+    * blocks until the extensions actually exist rather than racing past a
     * premature mark, and a registration that throws leaves the session
     * unmarked so the next call retries.
     */
@@ -132,6 +145,9 @@ object GraftExtensions {
         spark.sessionState.functionRegistry
           .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
       }
+      val ex = spark.experimental
+      ex.extraOptimizations = ex.extraOptimizations ++ rules.filterNot(ex.extraOptimizations.contains)
+      ex.extraStrategies = ex.extraStrategies ++ strategies.filterNot(ex.extraStrategies.contains)
       java.lang.Boolean.TRUE
     })
     ()

@@ -399,11 +399,4 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     }.asInstanceOf[NamedExpression])
     Some(agg.copy(aggregateExpressions = newAggExprs, child = newChild))
   }
-
-  /** Idempotently attach to a live session via experimental methods. */
-  def register(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(MvRewriteRule))
-      ex.extraOptimizations = ex.extraOptimizations :+ MvRewriteRule
-  }
 }

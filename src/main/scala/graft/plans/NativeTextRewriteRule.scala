@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, ArrayContains, ArrayFilter, Expression, LambdaFunction, Length, Literal, NamedLambdaVariable, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -66,11 +65,4 @@ object NativeTextRewriteRule extends Rule[LogicalPlan] {
             finRef.exprId == fin.exprId && strArray(arr) =>
         SumStrLen(arr, mode.evalMode)
     }
-
-  /** Idempotently attach to a live session via experimental methods. */
-  def register(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(NativeTextRewriteRule))
-      ex.extraOptimizations = ex.extraOptimizations :+ NativeTextRewriteRule
-  }
 }

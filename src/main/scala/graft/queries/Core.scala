@@ -814,7 +814,6 @@ object Core {
     * formulation in DuckDB, so both strategies answer the same check.
     */
   def q27TopkPerKey(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     t(spark, dir, "lineitem")
       .groupBy(col("l_suppkey"))
       .agg(expr("topk_by(l_extendedprice, l_orderkey * 10 + l_linenumber, 3)").as("top"))

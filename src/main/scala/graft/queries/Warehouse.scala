@@ -2125,7 +2125,6 @@ object Warehouse {
     * same session never see a leaked rewrite path.
     */
   def q96MvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MvRewriteRule.register(spark)
     // per-invocation nonce: annIvfCached's convention — concurrent
     // invocations must not race write-vs-read on a shared view path
     val mvPath = s"${graft.engine.WorkDirs.processScoped("graft_mv_li")}/" +
@@ -3153,7 +3152,6 @@ object Warehouse {
     * actually fired.
     */
   def q111MvRewriteOrders(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MvRewriteRule.register(spark)
     val d = graft.engine.MatView.registry("orders")
     val mvPath = s"${graft.engine.WorkDirs.processScoped("graft_mv_ord")}/" +
       s"mv-${mvNonce.incrementAndGet()}"
@@ -3449,7 +3447,6 @@ object Warehouse {
     * join remains).
     */
   def q115MvRewriteJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MvRewriteRule.register(spark)
     val d = graft.engine.MatView.joinRegistry("lineitem_orders")
     val mvPath = s"${graft.engine.WorkDirs.processScoped("graft_mv_join")}/" +
       s"mv-${mvNonce.incrementAndGet()}"
@@ -3668,7 +3665,6 @@ object Warehouse {
     * by accident.
     */
   def q118MvRewriteJoinCust(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MvRewriteRule.register(spark)
     val d = graft.engine.MatView.joinRegistry("orders_customer")
     val mvPath = s"${graft.engine.WorkDirs.processScoped("graft_mv_jcust")}/" +
       s"mv-${mvNonce.incrementAndGet()}"
@@ -3990,7 +3986,6 @@ object Warehouse {
     * grain covers both members, and the rewrite actually fired.
     */
   def q122MvAdvisorLoop(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MvRewriteRule.register(spark)
     // the workload family: two dashboard frames over part, different
     // grains + a filter dimension — exactly what a view catalog sees
     def brandRev = t(spark, dir, "part")
@@ -4113,7 +4108,6 @@ object Warehouse {
     * view (and one base scan) per measure.
     */
   def q124MvAdvisorMulti(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MvRewriteRule.register(spark)
     // the KPI family: line-count + revenue at (flag, status) grain, and
     // average shipped quantity per flag — three states, two measures
     def volRev = t(spark, dir, "lineitem")

@@ -33,7 +33,6 @@ object Decontaminate {
     */
   def clean(docs: DataFrame, probes: Seq[String]): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     // normalize probes to single-space token joins FIRST: word_ngrams
     // emits single-space grams, so a probe with a tab or double space

@@ -29,7 +29,6 @@ private[streaming] trait EventsExperimentation { this: Events.type =>
     * engines. One per-user aggregate + a 2-row arm rollup.
     */
   def aaTest(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val users = events(spark, dir)
       .groupBy(col("user_id"))
       .agg((sum((col("event_type") === "purchase").cast("long")) >= 14)
@@ -370,7 +369,6 @@ private[streaming] trait EventsExperimentation { this: Events.type =>
     cupedOn(events(spark, dir))
 
   def cupedOn(ev: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(ev.sparkSession)
     val t0 = ev.agg(min(col("ts")).as("t0"))
     val cutUs = 15L * 86400L * 1000000L
     val pu = ev.crossJoin(broadcast(t0))
@@ -617,7 +615,6 @@ private[streaming] trait EventsExperimentation { this: Events.type =>
     sequentialTestOn(events(spark, dir))
 
   def sequentialTestOn(ev: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(ev.sparkSession)
     val t0 = ev.agg(min(col("ts")).as("t0"))
     val perUserLook = ev.crossJoin(broadcast(t0))
       .withColumn("vc", expr("CAST(round(value * 100) AS BIGINT)"))
@@ -1011,7 +1008,6 @@ private[streaming] trait EventsExperimentation { this: Events.type =>
     * an abelian monoid. Shared verbatim with the batch operator.
     */
   def bootstrapStates(ev: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(ev.sparkSession)
     ev.select(col("event_id"), col("v"),
         explode(expr("sequence(0L, 63L)")).as("b"))
       .withColumn("u", expr("pmod(mix64(event_id * 64L + b), 1048576L)"))

@@ -31,7 +31,6 @@ class BlowupSpec extends SparkSpecBase {
   }
 
   test("embeddings: rotation preserves within-copy cosines, decorrelates cross-copy") {
-    graft.plans.GraftExtensions.register(spark)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val stride = 1000000000L
     // cross-copy: same base vector, copies 0 vs 1 → rotated by one → low cosine

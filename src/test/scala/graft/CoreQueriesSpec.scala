@@ -130,7 +130,6 @@ class CoreQueriesSpec extends SparkSpecBase {
 
   test("topk_by aggregate: ordering, ties, short groups (TopKByAgg)") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     Seq(
       (1L, 5.0, 10L), (1L, 7.0, 11L), (1L, 7.0, 9L), (1L, 1.0, 12L), (1L, 6.0, 13L),
       (2L, 3.0, 20L)) // group 2 has fewer rows than k
@@ -146,7 +145,6 @@ class CoreQueriesSpec extends SparkSpecBase {
 
   test("topk_by heap buffer equals window row_number at large k across partitions") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // 5k rows, 2 keys, shuffled across 4 partitions; k = 2000 exercises
     // lazy array growth, sift paths, and partial/final merge + ser/de
     val df = (0 until 5000)
@@ -168,7 +166,6 @@ class CoreQueriesSpec extends SparkSpecBase {
   }
 
   test("topk_by null k literal gets a dedicated error") {
-    graft.plans.GraftExtensions.register(spark)
     val e = intercept[Exception](
       spark.sql("SELECT topk_by(cast(1.0 as double), 1L, cast(null as int))").collect())
     assert(e.getMessage.contains("non-null literal int"))

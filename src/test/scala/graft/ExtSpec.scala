@@ -197,7 +197,6 @@ class ExtSpec extends SparkSpecBase {
   test("winnowing: shared ≥(w+k−1)-char substring shares a fingerprint, shift-robust") {
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
-    graft.plans.GraftExtensions.register(spark)
     val shared = "the quick brown fox jumps over" // 30 ≥ w+k−1 = 11 chars
     val d = Seq(
       (1L, s"AAAA $shared BBBB"),
@@ -370,7 +369,6 @@ class ExtSpec extends SparkSpecBase {
       assert(keep == (if (logit > 0) 1 else 0)) }
     // the scan-side HOF fold agrees with an explicit explode + groupBy
     // recomputation of the same hashed weights (different plan, same math)
-    graft.plans.GraftExtensions.register(spark)
     val explicit = tinyDocs()
       .select(col("doc_id"), explode(expr("word_ngrams(text, 2)")).as("g"))
       .withColumn("w8", expr("pmod(mix64(pmod(roll_hash31(g), 65536)), 8) - 4"))
@@ -607,7 +605,6 @@ class ExtSpec extends SparkSpecBase {
 
   test("bloom_might_contain: no false negatives; bloom contamination equals exact") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // expression level: every inserted item must probe true (bloom
     // guarantee the prefilter's exactness argument rests on)
     val items = (1 to 200).map(i => s"item$i")
@@ -629,7 +626,6 @@ class ExtSpec extends SparkSpecBase {
 
   test("cms_estimate: one-sided error; cms heavy hitters equal exact group-by") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // expression level: the estimate must never undercount — the property
     // the prefilter's exactness argument rests on
     val toks = (1 to 500).flatMap(i => Seq.fill(i % 7 + 1)(s"tok${i % 40}"))
@@ -659,7 +655,6 @@ class ExtSpec extends SparkSpecBase {
 
   test("sketch expressions: shingle_hashes dedups + simhash64 majority bits + aggregate twins") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val df = Seq((1L, "a b c d"), (2L, "a b c a b c"), (3L, "x y")).toDF("doc_id", "text")
     df.createOrReplaceTempView("sketch_docs")
     val rows = spark.sql(
@@ -1292,7 +1287,6 @@ class ExtSpec extends SparkSpecBase {
     r.foreach(row => assert(row.getLong(0) != row.getLong(1))) // self excluded
     // each query's best found neighbor is at least as close as the
     // fixed entry point (the walk can only improve on where it starts)
-    graft.plans.GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     val vfp = e.selectExpr("vec_id",
       "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d) as bigint)) as vfp")
@@ -1712,7 +1706,6 @@ class ExtSpec extends SparkSpecBase {
     import java.sql.Timestamp
     val base = Timestamp.valueOf("2024-03-01 00:00:00").getTime
     // resolve each user's hash arm the same way the operator will
-    graft.plans.GraftExtensions.register(spark)
     val arms = spark.range(1, 201).selectExpr("id AS user_id",
       "cast(pmod(mix64(id), 2) as int) AS arm").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap

@@ -51,7 +51,6 @@ class MvAdvisorSpec extends SparkSpecBase {
   }
 
   test("materialize closes the loop: advisor row -> built view -> armed rewrite (VERDICT r13 item 4)") {
-    graft.plans.MvRewriteRule.register(spark)
     val dir = sf()
     def su = graft.engine.Tables.load(spark, dir, "supplier")
     // supplier has NO hand registry entry: a rewrite firing below can
@@ -85,7 +84,6 @@ class MvAdvisorSpec extends SparkSpecBase {
   }
 
   test("materialize synthesizes a MULTI-MEASURE join-view def: states from both sides, both queries answered (VERDICT r14 item 2)") {
-    graft.plans.MvRewriteRule.register(spark)
     val dir = sf()
     def o = graft.engine.Tables.load(spark, dir, "orders")
     def c = graft.engine.Tables.load(spark, dir, "customer")
@@ -131,7 +129,6 @@ class MvAdvisorSpec extends SparkSpecBase {
   }
 
   test("materialize builds and arms a JOIN-view def from an advised join candidate") {
-    graft.plans.MvRewriteRule.register(spark)
     val dir = sf()
     def o = graft.engine.Tables.load(spark, dir, "orders")
     def c = graft.engine.Tables.load(spark, dir, "customer")

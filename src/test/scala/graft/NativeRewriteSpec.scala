@@ -14,7 +14,6 @@ class NativeRewriteSpec extends SparkSpecBase {
     .withColumn("w", split(col("text"), " "))
 
   test("size(filter(array_contains)) rewrites to count_in_set in the optimized plan") {
-    NativeTextRewriteRule.register(spark)
     val df = docsW().select(
       expr("size(filter(w, x -> array_contains(array('the','a','of','and','to'), x)))").as("n"))
     val p = df.queryExecution.optimizedPlan.toString
@@ -23,7 +22,6 @@ class NativeRewriteSpec extends SparkSpecBase {
   }
 
   test("aggregate(acc + length(x)) rewrites to sum_strlen in the optimized plan") {
-    NativeTextRewriteRule.register(spark)
     val df = docsW().select(
       expr("aggregate(w, 0, (acc, x) -> acc + length(x))").as("s"))
     val p = df.queryExecution.optimizedPlan.toString
@@ -31,12 +29,13 @@ class NativeRewriteSpec extends SparkSpecBase {
   }
 
   test("rewritten results equal the flag-off interpreted results") {
-    NativeTextRewriteRule.register(spark)
-    def run(): Array[(Int, Int)] = docsW().select(
+    def run(): Array[(Int, Int, Int)] = docsW().select(
         expr("size(filter(w, x -> array_contains(array('the','a','of','and','to'), x)))").as("n"),
-        expr("aggregate(w, 0, (acc, x) -> acc + length(x))").as("s"))
-      .orderBy(col("n"), col("s"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
+        expr("aggregate(w, 0, (acc, x) -> acc + length(x))").as("s"),
+        expr("size(filter(array_distinct(w), x -> array_contains(array('the','a','of','and','to'), x)))")
+          .as("gopher_nstop"))
+      .orderBy(col("n"), col("s"), col("gopher_nstop"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
     val native = run()
     spark.conf.set(NativeTextRewriteRule.FlagKey, "false")
     val interpreted = try run() finally spark.conf.unset(NativeTextRewriteRule.FlagKey)
@@ -44,7 +43,6 @@ class NativeRewriteSpec extends SparkSpecBase {
   }
 
   test("null-element arrays: rewrite preserves the aggregate fold-poisoning NULL (ADVICE r3)") {
-    NativeTextRewriteRule.register(spark)
     // containsNull = true arrays, one with a null element (→ NULL sum, like
     // aggregate), one without (→ real sum), plus a null array (→ NULL).
     // Derived from range() so ConvertToLocalRelation can't pre-fold the
@@ -70,7 +68,6 @@ class NativeRewriteSpec extends SparkSpecBase {
   }
 
   test("guards: non-literal set, captured variable, and non-string arrays pass through") {
-    NativeTextRewriteRule.register(spark)
     import spark.implicits._
     val df = Seq((Seq("a", "b"), Seq("a"))).toDF("w", "s")
     // set is a column, not foldable → no rewrite

@@ -112,7 +112,6 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("dedup signatures are scan-side: no exchange below the sketch projection") {
-    graft.plans.GraftExtensions.register(spark)
     val d = graft.engine.Tables.load(spark, sf(), "documents")
       .selectExpr("doc_id", "shingle_hashes(text) AS ss", "simhash64(text) AS sim")
     val p = d.queryExecution.executedPlan.toString
@@ -122,7 +121,6 @@ class PlanSpec extends SparkSpecBase {
 
   test("ApproxNdvRule: COUNT(DISTINCT) rewrites to HLL only under the flag") {
     import org.apache.spark.sql.functions._
-    graft.plans.ApproxNdvRule.register(spark)
     val li = graft.engine.Tables.load(spark, sf(), "lineitem")
     def q = li.agg(countDistinct(col("l_partkey")).as("ndv"))
     val exact = q.head().getLong(0)
@@ -183,7 +181,6 @@ class PlanSpec extends SparkSpecBase {
 
   test("ApproxPercentileRule: percentile rewrites to the quantile sketch only under the flag") {
     graft.engine.Tables.registerAll(spark, sf())
-    graft.plans.ApproxPercentileRule.register(spark)
     val q = """SELECT l_returnflag, percentile(l_quantity, 0.5) AS p50
                FROM lineitem GROUP BY l_returnflag"""
     val off = spark.sql(q).queryExecution.optimizedPlan.toString

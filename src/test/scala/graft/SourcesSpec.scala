@@ -11,7 +11,6 @@ import graft.sources.Formats
 class SourcesSpec extends SparkSpecBase {
 
   test("word_ngrams: sorted distinct grams, split-compatible tokenization") {
-    graft.plans.GraftExtensions.register(spark)
     def g(text: String, n: Int): Seq[String] =
       spark.sql(s"SELECT word_ngrams('$text', $n) AS g").head().getSeq[String](0)
     assert(g("a b c", 2) == Seq("a b", "b c"))
@@ -26,7 +25,6 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("word_ngrams agrees with the explode+window bigram construction") {
-    graft.plans.GraftExtensions.register(spark)
     val docs = Tables.load(spark, sf(), "documents")
     val viaExpr = docs
       .select(col("doc_id"), explode(expr("word_ngrams(text, 2)")).as("ngram"))

@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one JVM-wide session; Spark reuses it
-  * across suites via getOrCreate).
-  */
+/** One JVM-wide [[graft.engine.Sessions]] session for every spec. */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf(dir: String = "0.001"): String = s"/root/testdata/sf$dir"
@@ -13,13 +11,7 @@ trait SparkSpecBase extends AnyFunSuite {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.engine.Sessions.create()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

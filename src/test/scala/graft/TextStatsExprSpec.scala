@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** Pins the native text-stats expressions (count_in_set / sum_strlen /
   * roll_hash31) to the interpreted HOF formulations they replaced —
   * element-for-element equality on adversarial inputs (empty strings,
@@ -34,7 +32,6 @@ class TextStatsExprSpec extends SparkSpecBase {
   }
 
   test("count_in_set equals filter+array_contains on adversarial inputs") {
-    GraftExtensions.register(spark)
     val diff = adversarial()
       .withColumn("w", split(col("text"), " "))
       .select(
@@ -45,7 +42,6 @@ class TextStatsExprSpec extends SparkSpecBase {
   }
 
   test("sum_strlen equals aggregate+length on adversarial inputs") {
-    GraftExtensions.register(spark)
     val diff = adversarial()
       .withColumn("w", split(col("text"), " "))
       .select(
@@ -56,7 +52,6 @@ class TextStatsExprSpec extends SparkSpecBase {
   }
 
   test("roll_hash31 equals the split+ascii fold on adversarial inputs") {
-    GraftExtensions.register(spark)
     val diff = adversarial()
       .select(
         expr("roll_hash31(text)").as("fast"),
@@ -67,7 +62,6 @@ class TextStatsExprSpec extends SparkSpecBase {
   }
 
   test("native expressions equal HOF forms on the documents table") {
-    GraftExtensions.register(spark)
     val docs = graft.engine.Tables.load(spark, sf(), "documents")
       .withColumn("w", split(col("text"), " "))
     val diff = docs.select(
@@ -103,7 +97,6 @@ class TextStatsExprSpec extends SparkSpecBase {
   }
 
   test("null input yields null; non-foldable set fails analysis") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((None: Option[String], Seq("a", "b"))).toDF("text", "arr")
     val r = df.select(expr("roll_hash31(text)"),

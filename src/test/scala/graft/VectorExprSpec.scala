@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** Native codegen expressions (dot_f32 / cosine_f32) must be
   * bit-identical to the sequential higher-order-function double fold
   * they replaced, and reject wrong input types at analysis time.
@@ -11,7 +9,6 @@ import graft.plans.GraftExtensions
 class VectorExprSpec extends SparkSpecBase {
 
   test("cosine_f32 bit-equals the zip_with/aggregate fold on real embeddings") {
-    GraftExtensions.register(spark)
     val e = graft.engine.Tables.load(spark, sf(), "embeddings").limit(50)
     val pairs = e.select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .crossJoin(e.select(col("vec_id").as("cid"), col("embedding").as("ce")))
@@ -29,7 +26,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("mix64 equals SketchHash.mix(_, 0) through codegen") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val ids = Seq(0L, 1L, 42L, -1L, Long.MaxValue, Long.MinValue)
     val got = ids.toDF("x").select(expr("mix64(x)")).collect().map(_.getLong(0))
@@ -38,7 +34,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("null inputs yield null") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((Some(Array(1.0f)), None: Option[Array[Float]])).toDF("a", "b")
     val r = df.select(expr("cosine_f32(a, b)")).collect()
@@ -46,7 +41,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("wrong input type fails analysis") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((1, 2)).toDF("a", "b")
     val e = intercept[Exception](df.select(expr("cosine_f32(a, b)")).collect())
@@ -54,7 +48,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("plane-offset sign_lsh slices agree with the single 64-bit signature") {
-    GraftExtensions.register(spark)
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
     // band b of the 64-bit signature == the 4-bit offset call at plane 4b,
     // for every row and band — the wide-banding form is bit-compatible
@@ -69,7 +62,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("sign_lsh / minhash_arr reject null array elements instead of reading zeros") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(Seq(Some(1.0f), None, Some(2.0f))).toDF("v")
     val e = intercept[Exception](df.select(expr("sign_lsh(v, 8)")).collect())
@@ -84,7 +76,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("l2sq_i64 bit-equals the zip_with/aggregate fold on real fixed-point pairs") {
-    GraftExtensions.register(spark)
     val e = graft.engine.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .selectExpr("vec_id",
         "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d) as bigint)) AS vfp")
@@ -96,7 +87,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("phash64 equals the block-mean/gradient reference on crafted payloads") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     def ref(payload: Array[Byte]): Long = {
       val len = payload.length
@@ -122,7 +112,6 @@ class VectorExprSpec extends SparkSpecBase {
   }
 
   test("pcm16_energy: LE signed samples, partial window, odd byte, empty") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     def run(bytes: Array[Byte], win: Int): Seq[Long] =
       Seq(Tuple1(bytes)).toDF("p")

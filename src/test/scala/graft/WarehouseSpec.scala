@@ -424,7 +424,6 @@ class WarehouseSpec extends SparkSpecBase {
   }
 
   test("q96 MV rewrite: plan reads the view, answers match base, ineligible untouched") {
-    graft.plans.MvRewriteRule.register(spark)
     val mvPath = java.nio.file.Files.createTempDirectory("graft_mv_spec").toString + "/mv"
     graft.engine.MatView.buildLineitem(spark, sf(), mvPath)
     def dashboard() = graft.engine.Tables.load(spark, sf(), "lineitem")
@@ -517,7 +516,6 @@ class WarehouseSpec extends SparkSpecBase {
     // path-PREFIX matching answered any subdirectory/part-file of the
     // base — a row SUBSET — from the full view; exact qualified-URI
     // equality must not
-    graft.plans.MvRewriteRule.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_mv_guard").toString
     val baseDir = s"$root/li"
     graft.engine.Tables.load(spark, sf(), "lineitem")
@@ -549,7 +547,6 @@ class WarehouseSpec extends SparkSpecBase {
   }
 
   test("MV registry: the orders view answers COUNT + cents-SUM, machinery not lineitem-shaped") {
-    graft.plans.MvRewriteRule.register(spark)
     val d = graft.engine.MatView.registry("orders")
     val mvPath = java.nio.file.Files
       .createTempDirectory("graft_mv_ord").toString + "/mv"
@@ -856,7 +853,6 @@ class WarehouseSpec extends SparkSpecBase {
   }
 
   test("q115 join-view rewrite: fires, matches the base join-aggregate, ineligible shapes pass through") {
-    graft.plans.MvRewriteRule.register(spark)
     val d = graft.engine.MatView.joinRegistry("lineitem_orders")
     val mvPath = java.nio.file.Files
       .createTempDirectory("graft_mv_join_spec").toString + "/mv"

@@ -99,6 +99,10 @@ check "stdin csv with ambient data dir" "Ben" "$out"
 out=$(printf 'id,name\n1,x\n' | run --sql "SELECT size(shingle_hashes('a b c d')) AS n, cosine_f32(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS c FROM table")
 check "extension functions in SQL" "| 2 | 1.0 |" "$out"
 
+# 18. Diag explain prints a physical plan for one query
+out=$(java $OPENS -Xmx2g -cp "$CP" graft.tools.Diag explain /root/testdata/sf0.001 q4_topk 2>/dev/null)
+check "diag explain" "== Physical Plan ==" "$out"
+
 echo "---"
 echo "$pass passed, $fail failed"
 exit $([ "$fail" = "0" ] && echo 0 || echo 1)
