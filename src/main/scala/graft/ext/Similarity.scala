@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.engine.Tables
+import graft.ext.Quantizer.l2sq
 
 /** Similarity search over the `embeddings` table
   * (vec_id: long, embedding: array<float> [64-dim], label: int).
@@ -221,7 +222,7 @@ object Similarity {
 
   def annIvfOn(e: DataFrame, iters: Int, nQueries: Int, k: Int,
       nprobe: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     annIvfCore(e, vfp.select(col("vec_id"), col("label").as("cell"), col("vfp")),
       iters, nQueries, k, nprobe)
   }
@@ -238,7 +239,7 @@ object Similarity {
   def annIvfCached(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val init = e.select(col("vec_id"), col("label").as("cell"),
-      expr(vfpExpr).as("vfp"))
+      expr(Quantizer.vfp).as("vfp"))
     // per-invocation nonce: two concurrent invocations in one JVM (parallel
     // query scheduling) must not race write-vs-read on a shared index path
     val idxDir = s"${graft.engine.WorkDirs.processScoped("graft_ivf_idx")}/" +
@@ -278,19 +279,13 @@ object Similarity {
     * and share the index across its probe points.
     */
   private def seededAssign(e: DataFrame, nSeeds: Int, iters: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
-    val seeds = farthestPointSeeds(vfp, nSeeds)
-    val wSeed = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("seed_id"))
-    val init = vfp.crossJoin(broadcast(seeds))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(vfp, svfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("rn", row_number().over(wSeed))
-      .filter(col("rn") === 1)
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
+    val init = Quantizer.nearest(vfp, "vfp", farthestPointSeeds(vfp, nSeeds), "seed_id")
       .select(col("vec_id"), col("seed_id").as("cell"), col("vfp"))
     ivfTrain(init, iters)
   }
 
-  /** Farthest-point seed table (seed_id, svfp): splitmix64-argmin first
+  /** Farthest-point seed table (seed_id, carr): splitmix64-argmin first
     * pick, then nSeeds−1 rounds of "the vector farthest from its nearest
     * chosen seed" (ties to the smaller vec_id — total order, replayable).
     * Each round scans the corpus once against the broadcast seed set and
@@ -301,45 +296,28 @@ object Similarity {
     var seeds = vfp
       .withColumn("h", expr("mix64(vec_id)"))
       .orderBy(col("h"), col("vec_id")).limit(1)
-      .select(col("vec_id").as("seed_id"), col("vfp").as("svfp"))
+      .select(col("vec_id").as("seed_id"), col("vfp").as("carr"))
       .localCheckpoint(true)
     for (_ <- 2 to nSeeds) {
-      // min-dist-to-any-seed via an array fold over the packed seed
-      // structs (order-independent: array_min), then a global top-1
-      val packed = seeds.agg(collect_list(struct(col("seed_id"), col("svfp"))).as("sds"))
-      val next = vfp.crossJoin(broadcast(packed))
-        .withColumn("mind", expr(
-          "array_min(transform(sds, s -> aggregate(zip_with(vfp, s.svfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)))"))
-        .orderBy(col("mind").desc, col("vec_id")).limit(1)
-        .select(col("vec_id").as("seed_id"), col("vfp").as("svfp"))
+      val next = Quantizer.nearest(vfp, "vfp", seeds, "seed_id")
+        .orderBy(col("dist").desc, col("vec_id")).limit(1)
+        .select(col("vec_id").as("seed_id"), col("vfp").as("carr"))
       seeds = seeds.unionByName(next).localCheckpoint(true)
     }
     seeds
   }
+
+  /** The IVF coarse quantizer (ccell, carr) of a (cell, vfp) assignment:
+    * k×dim truncated-division centroids. Shared by the IVF training
+    * loop, the probes and the PQ residual encoder. */
+  private[graft] def cellCentroids(a: DataFrame): DataFrame =
+    Quantizer.centroids(a.select(col("cell").as("ccell"), col("vfp")), Seq("ccell"), "vfp")
 
   /** Shared IVF training + probe: `init` is the starting (vec_id, cell,
     * vfp) assignment — the label column for [[annIvfOn]], the farthest-
     * point seed cells for [[annIvfSeededOn]]; everything downstream is
     * identical (and identically replayed by the oracle CTEs).
     */
-  /** Fixed-point squared-L2 between the row's `vfp` and a centroid `carr`
-    * — the shared distance kernel of the IVF/PQ family. */
-  private val ivfDistExpr =
-    "aggregate(zip_with(vfp, carr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
-
-  /** k×dim truncated-division centroids of the current (cell, vfp)
-    * assignment — partial+final aggregate, ships k×64 longs, then
-    * broadcast. Shared by the IVF training loop and the PQ residual
-    * encoder. */
-  private[graft] def cellCentroids(a: DataFrame): DataFrame = a
-    .select(col("cell").as("ccell"), posexplode(col("vfp")).as(Seq("dim", "v")))
-    .groupBy(col("ccell"), col("dim"))
-    .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-    .withColumn("c", expr("s div n"))
-    .groupBy(col("ccell"))
-    .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-      .as("carr"))
-
   private def annIvfCore(e: DataFrame, init: DataFrame, iters: Int,
       nQueries: Int, k: Int, nprobe: Int): DataFrame =
     ivfProbe(e, ivfTrain(init, iters), nQueries, k, nprobe)
@@ -353,14 +331,10 @@ object Similarity {
     * ([[annIvfCached]] grades the full save→load→probe loop).
     */
   def ivfTrain(init: DataFrame, iters: Int): DataFrame = {
-    val distExpr = ivfDistExpr
     var assign = init
     for (_ <- 1 to iters) {
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("ccell"))
-      assign = assign.crossJoin(broadcast(cellCentroids(assign)))
-        .withColumn("dist", expr(distExpr))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      assign = Quantizer.nearest(assign.select(col("vec_id"), col("vfp")), "vfp",
+          cellCentroids(assign), "ccell")
         .select(col("vec_id"), col("ccell").as("cell"), col("vfp"))
         .localCheckpoint(true)
     }
@@ -378,7 +352,6 @@ object Similarity {
   def ivfProbe(e: DataFrame, assign: DataFrame, nQueries: Int, k: Int,
       nprobe: Int, centOverride: Option[DataFrame] = None,
       candAssign: Option[DataFrame] = None): DataFrame = {
-    val distExpr = ivfDistExpr
     val cent = centOverride.getOrElse(cellCentroids(assign))
     // rank cells per query by fixed-point L2 to the trained centroids,
     // keep nprobe; the query side re-joins its float embedding for the
@@ -388,7 +361,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("vfp"), col("qe"))
     val wCell = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("ccell"))
     val probed = q.crossJoin(broadcast(cent))
-      .withColumn("cdist", expr(distExpr))
+      .withColumn("cdist", expr(l2sq("vfp", "carr")))
       .withColumn("cr", row_number().over(wCell))
       .filter(col("cr") <= nprobe)
       .select(col("qid"), col("qe"), col("ccell"))
@@ -411,20 +384,15 @@ object Similarity {
     * append step (VERDICT r13 item 5): no retraining, one scan of the
     * new batch against the broadcast centroid table, ties to the
     * smaller cell id exactly like the training rounds. The returned
-    * (vec_id, cell, vfp) rows append to the persisted index parquet;
-    * [[graft.streaming.IvfAppendIngest]] is the identical fold as a
-    * stream-static join (stateless, window-free), StreamingSpec pins
-    * stream ≡ batch.
+    * (vec_id, cell, vfp) rows append to the persisted index parquet.
+    * Window-free ([[Quantizer.nearest]]), so the streaming twins
+    * ([[graft.streaming.IvfAppendIngest]] and the split, re-center and
+    * retrain ingests) route each micro-batch through this same function.
     */
-  def ivfAssignFrozen(newVecs: DataFrame, cent: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("ccell"))
-    newVecs.select(col("vec_id"), expr(vfpExpr).as("vfp"))
-      .crossJoin(broadcast(cent))
-      .withColumn("dist", expr(ivfDistExpr))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def ivfAssignFrozen(newVecs: DataFrame, cent: DataFrame): DataFrame =
+    Quantizer.nearest(newVecs.select(col("vec_id"), expr(Quantizer.vfp).as("vfp")),
+        "vfp", cent, "ccell")
       .select(col("vec_id"), col("ccell").as("cell"), col("vfp"))
-  }
 
   /** The missing lifecycle step past [[annIvfCached]]'s build-once/
     * probe-many: INDEX MAINTENANCE. Train on the base corpus (vec_id %
@@ -448,7 +416,7 @@ object Similarity {
       s"index-${ivfIdxNonce.incrementAndGet()}"
     val (idxDir, centDir) = (s"$root/assign", s"$root/quantizer")
     val init = base.select(col("vec_id"), col("label").as("cell"),
-      expr(vfpExpr).as("vfp"))
+      expr(Quantizer.vfp).as("vfp"))
     val trained = ivfTrain(init, iters = 2)
     trained.write.mode("overwrite").parquet(idxDir)
     cellCentroids(trained).write.mode("overwrite").parquet(centDir)
@@ -478,14 +446,14 @@ object Similarity {
     val e = emb(spark, dir)
     val isNew = expr("vec_id % 7 = 3")
     val init = e.filter(!isNew).select(col("vec_id"), col("label").as("cell"),
-      expr(vfpExpr).as("vfp"))
+      expr(Quantizer.vfp).as("vfp"))
     val assign = ivfTrain(init, iters = 2)
     val cent = cellCentroids(assign)
     val members = assign.withColumn("src", lit(0L))
       .unionByName(ivfAssignFrozen(e.filter(isNew), cent)
         .withColumn("src", lit(1L)))
     val d = members.join(broadcast(cent), col("cell") === col("ccell"))
-      .withColumn("d2", expr(ivfDistExpr))
+      .withColumn("d2", expr(l2sq("vfp", "carr")))
     val tot = d.agg(count(lit(1)).as("n_total"))
     d.groupBy(col("cell"))
       .agg(sum(when(col("src") === 0L, 1L).otherwise(0L)).as("n_base"),
@@ -576,7 +544,7 @@ object Similarity {
       .unionByName(newAssign.withColumn("src", lit(1L)))
       .localCheckpoint(true)
     val h = members.join(broadcast(cent), col("cell") === col("ccell"))
-      .withColumn("d2", expr(ivfDistExpr))
+      .withColumn("d2", expr(l2sq("vfp", "carr")))
       .groupBy(col("cell"))
       .agg(sum(when(col("src") === 0L, col("d2"))).as("bd2"),
         sum(when(col("src") === 0L, 1L).otherwise(0L)).as("nb"),
@@ -611,7 +579,7 @@ object Similarity {
     val rcm = members.join(worst, col("cell") === col("rcell"))
     def meanD2(c: DataFrame, alias: String): DataFrame =
       rcm.join(broadcast(c), col("cell") === col("ccell"))
-        .withColumn("d2", expr(ivfDistExpr))
+        .withColumn("d2", expr(l2sq("vfp", "carr")))
         .agg(expr("sum(d2) div count(1)").as(alias))
     def probe(c: DataFrame): DataFrame =
       ivfProbe(e, assignAll, nQueries = 10, k = 5, nprobe = 4,
@@ -736,7 +704,7 @@ object Similarity {
   def annIvfSplit(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val init = e.select(col("vec_id"), col("label").as("cell"),
-      expr(vfpExpr).as("vfp"))
+      expr(Quantizer.vfp).as("vfp"))
     val assign = graft.engine.Materialize.stage(ivfTrain(init, iters = 2))
     val occ = assign.groupBy(col("cell")).agg(count(lit(1)).as("n_before"))
     val hot = occ.orderBy(col("n_before").desc, col("cell")).limit(1)
@@ -746,20 +714,17 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("vfp"))
     val seedA = members
       .join(broadcast(cellCentroids(assign)), col("cell") === col("ccell"))
-      .withColumn("d", expr(ivfDistExpr))
+      .withColumn("d", expr(l2sq("vfp", "carr")))
       .orderBy(col("d").desc, col("vec_id")).limit(1)
       .select(col("vfp").as("avfp"))
     val seedB = members.crossJoin(broadcast(seedA))
-      .withColumn("da", expr(
-        "aggregate(zip_with(vfp, avfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
+      .withColumn("da", expr(l2sq("vfp", "avfp")))
       .orderBy(col("da").desc, col("vec_id")).limit(1)
       .select(col("vfp").as("bvfp"))
     val sp = members.crossJoin(broadcast(seedA)).crossJoin(broadcast(seedB))
       .crossJoin(broadcast(mx))
-      .withColumn("da", expr(
-        "aggregate(zip_with(vfp, avfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("db", expr(
-        "aggregate(zip_with(vfp, bvfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
+      .withColumn("da", expr(l2sq("vfp", "avfp")))
+      .withColumn("db", expr(l2sq("vfp", "bvfp")))
       .select(col("vec_id"),
         when(col("da") <= col("db"), col("cell"))
           .otherwise(col("maxcell") + 1).as("cell"))
@@ -857,7 +822,7 @@ object Similarity {
     val e = emb(spark, dir)
     val (nQ, k, nprobe) = (10, 5, 2)
     val init = e.select(col("vec_id"), col("label").as("cell"),
-      expr(vfpExpr).as("vfp"))
+      expr(Quantizer.vfp).as("vfp"))
     val assign = ivfTrain(init, iters = 2)
     val eligIds = e.filter(expr("label % 5 = 0")).select(col("vec_id"))
     val pre = ivfProbe(e, assign, nQ, k, nprobe,
@@ -1175,27 +1140,12 @@ object Similarity {
     quantizePqOn(emb(spark, dir), nSub = 8, subDim = 8)
 
   def quantizePqOn(e: DataFrame, nSub: Int, subDim: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     val subs = vfp.select(col("vec_id"), col("label"),
       posexplode(expr(
         s"transform(sequence(0, ${nSub - 1}), s -> slice(vfp, s * $subDim + 1, $subDim))"))
         .as(Seq("subspace", "sv")))
-    val cb = subs
-      .select(col("label").as("cl"), col("subspace").as("csub"),
-        posexplode(col("sv")).as(Seq("dim", "v")))
-      .groupBy(col("cl"), col("csub"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", expr("s div n"))
-      .groupBy(col("cl"), col("csub"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-        .as("cw"))
-    val w = Window.partitionBy(col("vec_id"), col("subspace"))
-      .orderBy(col("dist"), col("cl"))
-    subs.join(broadcast(cb), col("subspace") === col("csub"))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(sv, cw, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    nearestCode(subs, pqCodebookOf(subs.withColumnRenamed("label", "cl")))
       .select(col("vec_id"), col("subspace"), col("cl").as("code"),
         col("dist").as("err_fp"))
       .orderBy(col("vec_id"), col("subspace"))
@@ -1259,7 +1209,7 @@ object Similarity {
 
   def jlProjectOn(e: DataFrame, kDim: Int, nPairs: Int): DataFrame = {
     val spark = e.sparkSession
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
     // the frozen sign matrix: kDim rows (j, 64-long sign vector), packed
     // to one broadcast row — rebuilt, never stored (it IS its seed)
     val signs = spark.range(64L * kDim)
@@ -1274,8 +1224,6 @@ object Similarity {
       .select(col("vec_id"), col("vfp"), expr(
         "transform(rows, sv -> aggregate(zip_with(vfp, sv, (a, b) -> a * b), 0L, (acc, x) -> acc + x))")
         .as("yarr"))
-    val d2 = (a: String, b: String) =>
-      s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
     // both legs bounded EXPLICITLY (ADVICE r15): the b-side previously
     // relied on constraint propagation through the (vec_id - 1) alias
     // to prune — not guaranteed to fire, and if it doesn't, one leg
@@ -1288,8 +1236,8 @@ object Similarity {
         .select((col("vec_id") - 1).as("va"), col("vfp").as("bvfp"),
           col("yarr").as("by")), "va")
       .select(col("va").as("vec_id_a"), (col("va") + 1).as("vec_id_b"),
-        expr(d2("avfp", "bvfp")).as("d2_orig"),
-        expr(d2("ay", "by")).as("d2_proj"))
+        expr(l2sq("avfp", "bvfp")).as("d2_orig"),
+        expr(l2sq("ay", "by")).as("d2_proj"))
       .withColumn("distortion_ppm", expr(
         s"cast(cast(d2_proj as decimal(38,0)) * 1000000 div ($kDim * nullif(d2_orig, 0L)) as bigint)"))
       .orderBy(col("vec_id_a"))
@@ -1356,7 +1304,7 @@ object Similarity {
 
   def normProfileOn(e: DataFrame): DataFrame = {
     val n2 = e.select(col("label"), col("vec_id"),
-      expr(s"aggregate($vfpExpr, 0L, (a, x) -> a + x * x)").as("n2"))
+      expr(s"aggregate(${Quantizer.vfp}, 0L, (a, x) -> a + x * x)").as("n2"))
     val stats = n2.groupBy(col("label"))
       .agg(count(lit(1)).as("n"), min(col("n2")).as("min_n2"),
         max(col("n2")).as("max_n2"), sum(col("n2")).as("s"))
@@ -1404,7 +1352,7 @@ object Similarity {
     embeddingDriftOn(emb(spark, dir))
 
   def embeddingDriftOn(e: DataFrame): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     val split = vfp.agg(expr("max(vec_id) div 2").as("mid"))
     val halves = vfp.crossJoin(broadcast(split))
       .withColumn("half", (col("vec_id") <= col("mid")).cast("int"))
@@ -1422,8 +1370,7 @@ object Similarity {
         .select(col("label"), col("carr").as("c2"), col("n").as("n_second")),
         "label")
       .select(col("label"), col("n_first"), col("n_second"),
-        expr("aggregate(zip_with(c1, c2, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)")
-          .as("shift_fp"))
+        expr(l2sq("c1", "c2")).as("shift_fp"))
       .orderBy(col("label"))
   }
 
@@ -1558,7 +1505,7 @@ object Similarity {
       rerank: Int): DataFrame = {
     // ---- coarse trainer: label-seeded cells, truncated-division KMeans
     val assign = ivfTrain(e.select(col("vec_id"), col("label").as("cell"),
-      expr(vfpExpr).as("vfp")), iters)
+      expr(Quantizer.vfp).as("vfp")), iters)
     val cent = cellCentroids(assign)
     val subs = pqResidualSubs(assign, cent, nSub, subDim).localCheckpoint(true)
     val cb = pqTrainCodebooks(subs, pqIters, nCodes)
@@ -1569,9 +1516,6 @@ object Similarity {
 
   private def pqSliceExpr(src: String, nSub: Int, subDim: Int): String =
     s"transform(sequence(0, ${nSub - 1}), s -> slice($src, s * $subDim + 1, $subDim))"
-
-  private def pqSubDist(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
 
   /** Residual subspace slices of an assignment against its (possibly
     * FROZEN) coarse centroids: r = vfp − centroid(cell), split into
@@ -1586,20 +1530,21 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         posexplode(expr(pqSliceExpr("res", nSub, subDim))).as(Seq("subspace", "sv")))
 
-  /** Truncated-mean codewords of the current (cl, subspace, sv)
-    * assignment — all subspaces in one frame (subspace is a group key). */
-  private def pqCodebookOf(a: DataFrame): DataFrame = a
-    .select(col("cl"), col("subspace").as("csub"),
-      posexplode(col("sv")).as(Seq("dim", "v")))
-    .groupBy(col("cl"), col("csub"), col("dim"))
-    .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-    .withColumn("c", expr("s div n"))
-    .groupBy(col("cl"), col("csub"))
-    .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-      .as("cw"))
+  /** Truncated-mean codewords (cl, csub, cw) of the current (cl,
+    * subspace, sv) assignment — all subspaces in one frame (subspace is
+    * a group key). */
+  private def pqCodebookOf(a: DataFrame): DataFrame =
+    Quantizer.centroids(a.select(col("cl"), col("subspace").as("csub"), col("sv")),
+        Seq("cl", "csub"), "sv")
+      .withColumnRenamed("carr", "cw")
 
-  private val pqCodeWindow = Window.partitionBy(col("vec_id"), col("subspace"))
-    .orderBy(col("cdist"), col("cl"))
+  /** Nearest codeword `cl` (and its squared error `dist`) per residual
+    * slice `sv` against a (cl, csub, cw) codebook, ties to the smaller
+    * codeword id; `subs` is unique on (vec_id, subspace). */
+  private def nearestCode(subs: DataFrame, cb: DataFrame): DataFrame =
+    Quantizer.nearest(subs, "sv",
+      cb.select(col("csub").as("subspace"), col("cl"), col("cw").as("carr")),
+      "cl", by = Seq("subspace"))
 
   /** Per-subspace K-codeword codebook trainer: vec_id % K init, `pqIters`
     * truncated-division KMeans rounds over the residual slices. Returns
@@ -1609,11 +1554,7 @@ object Similarity {
       nCodes: Int): DataFrame = {
     var pqa = subs.withColumn("cl", expr(s"vec_id % $nCodes"))
     for (_ <- 1 to pqIters) {
-      pqa = pqa.drop("cl").join(broadcast(pqCodebookOf(pqa)),
-          col("subspace") === col("csub"))
-        .withColumn("cdist", expr(pqSubDist("sv", "cw")))
-        .withColumn("rn", row_number().over(pqCodeWindow))
-        .filter(col("rn") === 1)
+      pqa = nearestCode(pqa.drop("cl"), pqCodebookOf(pqa))
         .select(col("vec_id"), col("cell"), col("subspace"), col("sv"), col("cl"))
         .localCheckpoint(true)
     }
@@ -1626,12 +1567,9 @@ object Similarity {
     * one-scan encode and the health monitor's distortion source.
     */
   private[graft] def pqEncodeFrozen(subs: DataFrame, cb: DataFrame): DataFrame =
-    subs.join(broadcast(cb), col("subspace") === col("csub"))
-      .withColumn("cdist", expr(pqSubDist("sv", "cw")))
-      .withColumn("rn", row_number().over(pqCodeWindow))
-      .filter(col("rn") === 1)
+    nearestCode(subs, cb)
       .select(col("vec_id").as("cid"), col("cell"), col("subspace"),
-        col("cl").as("code"), col("cdist").as("err_fp"))
+        col("cl").as("code"), col("dist").as("err_fp"))
 
   /** The IVF-PQ query path over prepared index artifacts (assignment,
     * coarse centroids, codebooks, codes) — factored from [[annIvfPqOn]]
@@ -1646,7 +1584,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("vfp").as("qvfp"))
     val wCell = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("ccell"))
     val probed = q.crossJoin(broadcast(cent))
-      .withColumn("cdist", expr(pqSubDist("qvfp", "carr")))
+      .withColumn("cdist", expr(l2sq("qvfp", "carr")))
       .withColumn("cr", row_number().over(wCell))
       .filter(col("cr") <= nprobe)
       .select(col("qid"), col("qvfp"), col("ccell"), col("carr"))
@@ -1657,7 +1595,7 @@ object Similarity {
       .select(col("qid"), col("ccell"),
         posexplode(expr(pqSliceExpr("qres", nSub, subDim))).as(Seq("asub", "qsv")))
       .join(broadcast(cb), col("asub") === col("csub"))
-      .withColumn("d", expr(pqSubDist("qsv", "cw")))
+      .withColumn("d", expr(l2sq("qsv", "cw")))
       .select(col("qid"), col("ccell"), col("asub"), col("cl").as("acode"),
         col("d"))
     // ---- candidates = codes in probed cells; ADC score = Σ table lookups
@@ -1676,7 +1614,7 @@ object Similarity {
     shortlist
       .join(assign.select(col("vec_id").as("cid"), col("vfp").as("cvfp")), "cid")
       .join(broadcast(q), "qid")
-      .withColumn("dist_fp", expr(pqSubDist("qvfp", "cvfp")))
+      .withColumn("dist_fp", expr(l2sq("qvfp", "cvfp")))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= k)
       .select(col("qid").as("vec_id"), col("cid").as("neighbor_id"),
@@ -1725,7 +1663,7 @@ object Similarity {
       val e0 = emb(spark, dir)
       val base = baseFilter.map(f => e0.filter(expr(f))).getOrElse(e0)
       ivfTrain(base.select(col("vec_id"), col("label").as("cell"),
-          expr(vfpExpr).as("vfp")), iters)
+          expr(Quantizer.vfp).as("vfp")), iters)
         .write.mode("overwrite").parquet(a.assign)
       val assign = spark.read.parquet(a.assign)
       cellCentroids(assign).write.mode("overwrite").parquet(a.cent)
@@ -1876,7 +1814,7 @@ object Similarity {
     * code assignment, every ADC sum, and the final exact distances.
     */
   /** Fixed-point squared-L2 between two BIGINT lists — the SQL twin of
-    * [[pqSubDist]], shared by every PQ oracle. */
+    * [[Quantizer.l2sq]], shared by every PQ oracle. */
   private def sqlSubDist(a: String, b: String): String =
     s"""CAST(list_aggregate(list_transform(list_zip($a, $b),
        |      z -> (z[1] - z[2]) * (z[1] - z[2])), 'sum') AS BIGINT)""".stripMargin
@@ -2003,13 +1941,13 @@ object Similarity {
       nQueries: Int, k: Int): DataFrame = {
     val approx = approxDf
       .select(col("vec_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
     val q = vfp.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("vfp").as("carr"))
     val wTop = Window.partitionBy(col("qid")).orderBy(col("dist"), col("cid"))
     val exact = vfp.select(col("vec_id").as("cid"), col("vfp"))
       .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("dist", expr(ivfDistExpr))
+      .withColumn("dist", expr(l2sq("vfp", "carr")))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= k)
       .select(col("qid").as("vec_id"), col("cid").as("neighbor_id"))
@@ -2198,17 +2136,17 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("vfp"))
     val seedA = members
       .join(broadcast(cent), col("cell") === col("ccell"))
-      .withColumn("d", expr(ivfDistExpr))
+      .withColumn("d", expr(l2sq("vfp", "carr")))
       .orderBy(col("d").desc, col("vec_id")).limit(1)
       .select(col("vfp").as("avfp"))
     val seedB = members.crossJoin(broadcast(seedA))
-      .withColumn("da", expr(pqSubDist("vfp", "avfp")))
+      .withColumn("da", expr(l2sq("vfp", "avfp")))
       .orderBy(col("da").desc, col("vec_id")).limit(1)
       .select(col("vfp").as("bvfp"))
     val sp = members.crossJoin(broadcast(seedA)).crossJoin(broadcast(seedB))
       .crossJoin(broadcast(mx))
-      .withColumn("da", expr(pqSubDist("vfp", "avfp")))
-      .withColumn("db", expr(pqSubDist("vfp", "bvfp")))
+      .withColumn("da", expr(l2sq("vfp", "avfp")))
+      .withColumn("db", expr(l2sq("vfp", "bvfp")))
       .select(col("vec_id"),
         when(col("da") <= col("db"), col("cell"))
           .otherwise(col("maxcell") + 1).as("cell"), col("vfp"))
@@ -2877,7 +2815,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("vfp"), col("qe"))
     val wCell = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("ccell"))
     val probed = q.crossJoin(broadcast(cent))
-      .withColumn("cdist", expr(ivfDistExpr))
+      .withColumn("cdist", expr(l2sq("vfp", "carr")))
       .withColumn("cr", row_number().over(wCell))
       .filter(col("cr") <= maxNp)
       .select(col("qid"), col("qe"), col("ccell"), col("cr"))
@@ -3193,19 +3131,6 @@ object Similarity {
       |FROM lab JOIN szc USING (cluster_id) ORDER BY vec_id""".stripMargin
 
   // ------------------------------------------- fixed-point vector aggs
-  /** Embeddings in scaled fixed point: vfp[i] = floor(v[i] × 10⁶) as
-    * BIGINT. The float→double widening and the ×10⁶ product are both
-    * exact IEEE operations (24-bit mantissa × 20-bit constant < 53
-    * bits), and floor is unambiguous cross-engine (unlike CAST, which
-    * truncates in Spark but rounds in DuckDB) — so the fixed-point
-    * image is bit-identical in both engines, and every downstream sum
-    * is exact integer arithmetic, immune to partition-order effects.
-    * The same trick as the PageRank fixed point (Dedup.pagerankOn),
-    * applied to vectors.
-    */
-  private val vfpExpr =
-    "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d) as bigint))"
-
   /** Per-label embedding centroids in exact fixed point — the "average
     * the cluster's vectors" primitive under KMeans maintenance, class
     * prototypes, and cluster drift monitoring. Output is one row per
@@ -3220,7 +3145,7 @@ object Similarity {
     centroidsOn(emb(spark, dir))
 
   def centroidsOn(e: DataFrame): DataFrame =
-    e.select(col("label"), posexplode(expr(vfpExpr)).as(Seq("dim", "v")))
+    e.select(col("label"), posexplode(expr(Quantizer.vfp)).as(Seq("dim", "v")))
       .groupBy(col("label"), col("dim"))
       .agg(sum(col("v")).as("sum_fp"), count(lit(1)).as("n"))
       .withColumn("centroid_fp", expr("sum_fp div n"))
@@ -3257,19 +3182,9 @@ object Similarity {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("label")).orderBy(col("d2").desc, col("vec_id"))
     val wn = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
-    val cent = vfp
-      .select(col("label"), posexplode(col("vfp")).as(Seq("dim", "v")))
-      .groupBy(col("label"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", expr("s div n"))
-      .groupBy(col("label"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), x -> x.c)")
-        .as("carr"))
-    vfp.join(broadcast(cent), "label")
-      .withColumn("d2",
-        expr("aggregate(zip_with(vfp, carr, (a, b) -> (a - b) * (a - b)), " +
-          "0L, (acc, x) -> acc + x)"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
+    vfp.join(broadcast(Quantizer.centroids(vfp, Seq("label"), "vfp")), "label")
+      .withColumn("d2", expr(l2sq("vfp", "carr")))
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("n_l", count(lit(1)).over(wn))
       .filter(col("rk") <= ceil(lit(0.05) * col("n_l")))
@@ -3308,31 +3223,21 @@ object Similarity {
     * inside BIGINT: |diff| ≤ 2×10⁶, squared ≤ 4×10¹², ×64 dims ≤
     * 2.6×10¹⁴.
     *
-    * Scale shape: the centroid table is k×dim KBs — broadcast; each
-    * vector computes its k distances scan-side via zip_with/aggregate
-    * folds (array order fixed → deterministic), and the argmin is a
-    * per-vector row_number. One pass over the corpus, no shuffle of
-    * embeddings at all (the centroid aggregate ships k×64 longs).
+    * Scale shape: the centroid table is k×dim KBs, packed into one
+    * broadcast row; each vector computes its k distances scan-side via
+    * zip_with/aggregate folds (array order fixed → deterministic) and
+    * takes the (dist, label) `array_min` ([[Quantizer.nearest]]). One
+    * pass over the corpus, no shuffle or sort of embeddings at all (the
+    * centroid aggregate ships k×64 longs).
     */
   def kmeansStep(spark: SparkSession, dir: String): DataFrame =
     kmeansStepOn(emb(spark, dir))
 
   def kmeansStepOn(e: DataFrame): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
-    val cent = vfp
-      .select(col("label").as("clabel"), posexplode(col("vfp")).as(Seq("dim", "v")))
-      .groupBy(col("clabel"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", expr("s div n"))
-      .groupBy(col("clabel"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-        .as("carr"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("clabel"))
-    vfp.crossJoin(broadcast(cent))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(vfp, carr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
+    val cent = Quantizer.centroids(vfp.withColumnRenamed("label", "clabel"),
+      Seq("clabel"), "vfp")
+    Quantizer.nearest(vfp, "vfp", cent, "clabel")
       .select(col("vec_id"), col("label").as("old_label"),
         col("clabel").as("new_label"), col("dist").as("dist_fp"),
         (col("label") =!= col("clabel")).cast("int").as("moved"))
@@ -3383,25 +3288,13 @@ object Similarity {
     */
   private def kmeansAssignRounds(e: DataFrame,
       iters: Int): (DataFrame, Seq[DataFrame]) = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     var assign = vfp.select(col("vec_id"), col("label").as("clabel"), col("vfp"))
     val rounds = Seq.newBuilder[DataFrame]
     for (_ <- 1 to iters) {
-      val cent = assign
-        .select(col("clabel").as("cl2"), posexplode(col("vfp")).as(Seq("dim", "v")))
-        .groupBy(col("cl2"), col("dim"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .withColumn("c", expr("s div n"))
-        .groupBy(col("cl2"))
-        .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-          .as("carr"))
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cl2"))
-      assign = assign.crossJoin(broadcast(cent))
-        .withColumn("dist", expr(
-          "aggregate(zip_with(vfp, carr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cl2").as("clabel"), col("vfp"), col("dist"))
+      assign = Quantizer.nearest(assign.select(col("vec_id"), col("vfp")), "vfp",
+          Quantizer.centroids(assign, Seq("clabel"), "vfp"), "clabel")
+        .select(col("vec_id"), col("clabel"), col("vfp"), col("dist"))
         .localCheckpoint(true)
       rounds += assign
     }
@@ -3530,18 +3423,11 @@ object Similarity {
     silhouetteOn(emb(spark, dir))
 
   def silhouetteOn(e: DataFrame): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
-    val cent = vfp
-      .select(col("label").as("clabel"), posexplode(col("vfp")).as(Seq("dim", "v")))
-      .groupBy(col("clabel"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", expr("s div n"))
-      .groupBy(col("clabel"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-        .as("carr"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
+    val cent = Quantizer.centroids(vfp.withColumnRenamed("label", "clabel"),
+      Seq("clabel"), "vfp")
     vfp.crossJoin(broadcast(cent))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(vfp, carr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
+      .withColumn("dist", expr(l2sq("vfp", "carr")))
       .groupBy(col("vec_id"), col("label"))
       .agg(max(when(col("clabel") === col("label"), col("dist"))).as("a_fp"),
         min(when(col("clabel") =!= col("label"), col("dist"))).as("b_fp"))
@@ -3634,7 +3520,7 @@ object Similarity {
     */
   private def knnEdgesFp(e: DataFrame, k: Int, nBands: Int,
       bandBits: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
     val bd = banded(e, nBands, bandBits)
     val a = bd.select(col("vec_id").as("va"), col("band"), col("band_key"))
     val b = bd.select(col("vec_id").as("vb"), col("band").as("bband"),
@@ -3656,7 +3542,7 @@ object Similarity {
 
   def labelSpreadOn(e: DataFrame, k: Int, nBands: Int, bandBits: Int,
       rounds: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     val edges = knnEdgesFp(e, k, nBands, bandBits)
     var labs = vfp.select(col("vec_id"),
       when(col("vec_id") % 5 === 0, col("label")).as("lab"))
@@ -3771,7 +3657,7 @@ object Similarity {
     hardNegativesOn(emb(spark, dir), nBands = 16, bandBits = 8)
 
   def hardNegativesOn(e: DataFrame, nBands: Int, bandBits: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     val bd = banded(e, nBands, bandBits)
     val a = bd.select(col("vec_id").as("va"), col("band"), col("band_key"))
     val b = bd.select(col("vec_id").as("vb"), col("band").as("bband"),
@@ -3813,7 +3699,7 @@ object Similarity {
     tripletMarginOn(emb(spark, dir), nBands = 16, bandBits = 8)
 
   def tripletMarginOn(e: DataFrame, nBands: Int, bandBits: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), col("label"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), col("label"), expr(Quantizer.vfp).as("vfp"))
     val bd = banded(e, nBands, bandBits)
     val cand = bd.select(col("vec_id").as("va"), col("band"), col("band_key"))
       .join(bd.select(col("vec_id").as("vb"), col("band").as("bband"),
@@ -4092,10 +3978,9 @@ object Similarity {
     // corpus re-decode × (hops + 1) rounds WAS the measured tail
     // (VERDICT r14 item 6; the r14 control experiment pinned the 10×
     // inflation to per-round latency × round count, not data volume)
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
       .localCheckpoint(true)
-    val dfpExpr =
-      "aggregate(zip_with(avfp, bvfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
+    val dfpExpr = l2sq("avfp", "bvfp")
     // ---- index build: banded candidates → exact-ranked out-edges, via
     // [[knnEdgesFp]]'s map-side bounded-heap topk_by. The row_number
     // window this replaces shuffled and fully sorted every scored
@@ -4224,14 +4109,13 @@ object Similarity {
       hops: Int, beam: Int, k: Int): DataFrame = {
     val approx = annGraphSearchOn(e, degree, nQueries, hops, beam, k)
       .select(col("vec_id"), col("neighbor_id")).withColumn("hit", lit(1L))
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
     val q = vfp.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("vfp").as("avfp"))
     val wq = Window.partitionBy(col("qid")).orderBy(col("dfp"), col("cid"))
     val exact = vfp.select(col("vec_id").as("cid"), col("vfp").as("bvfp"))
       .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("dfp", expr(
-        "aggregate(zip_with(avfp, bvfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
+      .withColumn("dfp", expr(l2sq("avfp", "bvfp")))
       .withColumn("rn", row_number().over(wq)).filter(col("rn") <= k)
       .select(col("qid").as("vec_id"), col("cid").as("neighbor_id"))
     exact.join(approx, Seq("vec_id", "neighbor_id"), "left")
@@ -4279,7 +4163,7 @@ object Similarity {
     dominantDirectionOn(emb(spark, dir), iters = 3)
 
   def dominantDirectionOn(e: DataFrame, iters: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
     powerIterOn(vfp, iters)
       .select(col("d").cast("long").as("dim"), col("v").as("dir_fp"))
       .orderBy(col("dim"))
@@ -4367,7 +4251,7 @@ object Similarity {
     pcaDeflateOn(emb(spark, dir), iters = 3)
 
   def pcaDeflateOn(e: DataFrame, iters: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
     val v1 = powerIterOn(vfp, iters) // localCheckpointed by its last round
     val v1l = v1.groupBy()
       .agg(expr("transform(array_sort(collect_list(struct(d, v))), p -> p.v)")
@@ -4461,14 +4345,8 @@ object Similarity {
     coresetKCenterOn(emb(spark, dir), nCenters = 8)
 
   def coresetKCenterOn(e: DataFrame, nCenters: Int): DataFrame = {
-    val vfp = e.select(col("vec_id"), expr(vfpExpr).as("vfp"))
-    val seeds = farthestPointSeeds(vfp, nCenters)
-    val wSeed = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("seed_id"))
-    vfp.crossJoin(broadcast(seeds))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(vfp, svfp, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-      .withColumn("rn", row_number().over(wSeed))
-      .filter(col("rn") === 1)
+    val vfp = e.select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
+    Quantizer.nearest(vfp, "vfp", farthestPointSeeds(vfp, nCenters), "seed_id")
       .groupBy(col("seed_id").as("center_id"))
       .agg(count(lit(1)).as("n_assigned"), max(col("dist")).as("radius_fp"),
         sum(col("dist")).as("sd"))

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.ext.Quantizer
 
 /** Streaming embedding-cell assignment: the ingest-time twin of the
   * similarity family's coarse quantizer ([[graft.ext.Similarity]]'s
@@ -15,49 +17,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[graft.ext.Similarity.kmeansStepOn]]'s centroid table), the per-row
   * decision is stateless.
   *
-  * The assignment is a pure per-row argmin against the broadcast packed
-  * centroid table (one struct array in one row — the
-  * farthest-point-seeding technique): `array_min` over (dist, cell)
-  * structs gives nearest-centroid with ties to the smaller cell id,
-  * bit-identical to the batch operator's (dist, cell) row_number — but
-  * with NO window function, so it runs on an unbounded stream with no
-  * watermark and no state store. Stream output ≡ batch assignment on
-  * the same corpus and reference by construction (StreamingSpec pins
-  * it).
+  * The centroids and the assignment are the kernel kmeansStepOn runs
+  * ([[graft.ext.Quantizer.centroids]], [[graft.ext.Quantizer.nearest]]):
+  * nearest centroid with ties to the smaller cell id, a per-row argmin
+  * against one broadcast packed row with NO window function, so it runs
+  * on an unbounded stream with no watermark and no state store.
+  * StreamingSpec pins stream output ≡ batch kmeansStep on the same
+  * corpus and reference.
   */
 object CellAssignIngest {
-
-  private val vfpExpr =
-    "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d) as bigint))"
-
-  /** The frozen model: one row packing every (cell, carr) centroid —
-    * fixed-point label-means of the reference corpus (KBs; broadcast to
-    * every micro-batch).
-    */
-  def packedCentroids(reference: DataFrame): DataFrame =
-    reference
-      .select(col("label").as("cell"), posexplode(expr(vfpExpr)).as(Seq("dim", "v")))
-      .groupBy(col("cell"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", expr("s div n"))
-      .groupBy(col("cell"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-        .as("carr"))
-      .agg(collect_list(struct(col("cell"), col("carr"))).as("cds"))
-
-  /** Assign each row of `batch` (vec_id, embedding, ...) to its nearest
-    * frozen centroid — stateless, window-free, streaming-safe.
-    */
-  def assign(batch: DataFrame, packed: DataFrame): DataFrame =
-    batch
-      .withColumn("vfp", expr(vfpExpr))
-      .crossJoin(broadcast(packed))
-      .withColumn("best", expr(
-        "array_min(transform(cds, s -> struct(" +
-          "aggregate(zip_with(vfp, s.carr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x) as dist, " +
-          "s.cell as cell)))"))
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        col("best.dist").as("dist_fp"))
 
   /** Embeddings stream from `embDir`; centroids freeze from the
     * reference snapshot at `refDir`; (vec_id, cell, dist_fp) rows land
@@ -66,10 +34,14 @@ object CellAssignIngest {
     */
   def start(spark: SparkSession, embDir: String, refDir: String,
       outDir: String, checkpointDir: String): StreamingQuery = {
-    val packed = packedCentroids(spark.read.parquet(refDir))
+    val cents = Quantizer.centroids(spark.read.parquet(refDir)
+        .select(col("label").as("cell"), expr(Quantizer.vfp).as("vfp")), Seq("cell"), "vfp")
       .localCheckpoint(true)
     val schema = spark.read.parquet(embDir).schema
-    assign(spark.readStream.schema(schema).parquet(embDir), packed)
+    val batch = spark.readStream.schema(schema).parquet(embDir)
+      .select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
+    Quantizer.nearest(batch, "vfp", cents, "cell")
+      .select(col("vec_id"), col("cell"), col("dist").as("dist_fp"))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .option("path", outDir)

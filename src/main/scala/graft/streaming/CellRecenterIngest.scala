@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.engine.Snapshots
+import graft.ext.Quantizer.l2sq
+import graft.ext.Similarity
 
 /** Streaming coarse-cell RE-CENTER — the budgeted-maintenance twin of
   * [[graft.ext.Similarity.annIvfRecenter]], completing the streaming
@@ -45,9 +47,6 @@ import graft.engine.Snapshots
   */
 object CellRecenterIngest {
 
-  private def distExpr(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
-
   /** The per-batch sink body — public so tests and backfills drive the
     * exact code the stream runs. Routes + ledger-appends `batch` (a
     * replayed id stages nothing), then evaluates the drift gate and
@@ -58,9 +57,8 @@ object CellRecenterIngest {
       appId: String, batchId: Long): Option[Long] = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return None
-    val packed = IvfAppendIngest.packedQuantizer(
-      Snapshots.read(spark, centTable)).localCheckpoint(true)
-    val assigned = IvfAppendIngest.assign(batch, packed).localCheckpoint(true)
+    val cent = Snapshots.read(spark, centTable).localCheckpoint(true)
+    val assigned = Similarity.ivfAssignFrozen(batch, cent).localCheckpoint(true)
     Snapshots.commitWithTxn(assigned, assignTable, appId, batchId)
     maybeRecenter(spark, assigned.select(col("vec_id")), assignTable,
       centTable, appId, batchId)
@@ -88,7 +86,7 @@ object CellRecenterIngest {
     // the batch op's drift aggregate verbatim: per-cell base vs batch
     // mean d² against the CURRENT centroids, all-integer
     val h = members.join(broadcast(cent), col("cell") === col("ccell"))
-      .withColumn("d2", expr(distExpr("vfp", "carr")))
+      .withColumn("d2", expr(l2sq("vfp", "carr")))
       .groupBy(col("cell"))
       .agg(sum(when(col("src") === 0L, col("d2"))).as("bd2"),
         sum(when(col("src") === 0L, 1L).otherwise(0L)).as("nb"),
@@ -110,7 +108,7 @@ object CellRecenterIngest {
         col("cell"))).as("w"))
       .select(col("w.cell")).head()
     val worst = worstRow.getLong(0)
-    val recentered = graft.ext.Similarity.cellCentroids(
+    val recentered = Similarity.cellCentroids(
       members.filter(col("cell") === worst)
         .select(col("vec_id"), col("cell"), col("vfp")))
     // single-publish atomic swap: new centroid + the ledger mark land

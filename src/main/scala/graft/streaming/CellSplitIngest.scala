@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.engine.Snapshots
+import graft.ext.Quantizer.l2sq
+import graft.ext.Similarity
 
 /** Streaming hot-cell SPLIT — the rebalance decision fed by a live
   * health feed (VERDICT r15 item 5), completing the maintenance story
@@ -42,9 +44,6 @@ import graft.engine.Snapshots
   */
 object CellSplitIngest {
 
-  private def distExpr(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
-
   /** The per-batch sink body — public so tests and backfills drive the
     * exact code the stream runs. Routes + ledger-appends `batch` (empty
     * or replayed ids stage nothing), then evaluates the gate. Returns
@@ -54,9 +53,8 @@ object CellSplitIngest {
       appId: String, batchId: Long, firePct: Int): Option[Long] = {
     val spark = batch.sparkSession
     if (!batch.isEmpty) {
-      val packed = IvfAppendIngest.packedQuantizer(
-        Snapshots.read(spark, centTable)).localCheckpoint(true)
-      Snapshots.commitWithTxn(IvfAppendIngest.assign(batch, packed),
+      val cent = Snapshots.read(spark, centTable).localCheckpoint(true)
+      Snapshots.commitWithTxn(Similarity.ivfAssignFrozen(batch, cent),
         assignTable, appId, batchId)
     }
     maybeSplit(spark, assignTable, centTable, firePct)
@@ -90,30 +88,23 @@ object CellSplitIngest {
     val hotCent = Snapshots.read(spark, centTable)
       .filter(col("ccell") === hotCell).select(col("carr"))
     val seedA = members.crossJoin(broadcast(hotCent))
-      .select(min(struct((-expr(distExpr("vfp", "carr"))).as("nd"),
+      .select(min(struct((-expr(l2sq("vfp", "carr"))).as("nd"),
         col("vec_id"), col("vfp"))).as("s"))
       .select(col("s.vfp").as("avfp"))
     val seedB = members.crossJoin(broadcast(seedA))
-      .select(min(struct((-expr(distExpr("vfp", "avfp"))).as("nd"),
+      .select(min(struct((-expr(l2sq("vfp", "avfp"))).as("nd"),
         col("vec_id"), col("vfp"))).as("s"))
       .select(col("s.vfp").as("bvfp"))
     val childId = maxCell + 1L
     val sp = members.crossJoin(broadcast(seedA)).crossJoin(broadcast(seedB))
-      .withColumn("da", expr(distExpr("vfp", "avfp")))
-      .withColumn("db", expr(distExpr("vfp", "bvfp")))
+      .withColumn("da", expr(l2sq("vfp", "avfp")))
+      .withColumn("db", expr(l2sq("vfp", "bvfp")))
       .select(col("vec_id"),
         when(col("da") <= col("db"), lit(hotCell))
           .otherwise(lit(childId)).as("cell"),
         col("vfp"))
       .localCheckpoint(true)
-    val childCent = sp
-      .select(col("cell").as("ccell"), posexplode(col("vfp")).as(Seq("dim", "v")))
-      .groupBy(col("ccell"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", expr("s div n"))
-      .groupBy(col("ccell"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), p -> p.c)")
-        .as("carr"))
+    val childCent = Similarity.cellCentroids(sp)
     // quantizer FIRST (see scaladoc); both-child exclusion folds away a
     // half-published child from a crashed prior attempt
     Snapshots.commit(

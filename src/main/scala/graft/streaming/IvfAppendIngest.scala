@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.ext.Similarity
 
 /** Streaming IVF index maintenance — the ingest twin of
   * [[graft.ext.Similarity.annIvfAppend]]'s micro-batch append (VERDICT
@@ -11,36 +12,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * artifact, trained once per corpus release) and their (vec_id, cell,
   * vfp) posting rows land directly in the index parquet, so the ANN
   * index stays current without ever retraining or rescanning the
-  * standing corpus. Same pattern as [[CellAssignIngest]]: the per-row
-  * decision is a stateless argmin against one broadcast packed-centroid
-  * row — `array_min` over (dist, cell) structs, bit-identical to the
-  * batch fold's (dist, ccell) row_number tie-break — so the stream
-  * needs no watermark and no state store, and StreamingSpec pins
+  * standing corpus. The per-row decision is the batch operator itself,
+  * [[graft.ext.Similarity.ivfAssignFrozen]]: a stateless argmin against
+  * the broadcast packed quantizer ([[graft.ext.Quantizer.nearest]]), so
+  * the stream needs no watermark and no state store. StreamingSpec pins
   * stream-appended index ≡ batch-appended index.
   */
 object IvfAppendIngest {
-
-  private val vfpExpr =
-    "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d) as bigint))"
-
-  /** One row packing the frozen quantizer (ccell, carr) table (KBs;
-    * broadcast to every micro-batch). */
-  def packedQuantizer(cent: DataFrame): DataFrame =
-    cent.agg(collect_list(struct(col("ccell").as("cell"), col("carr")))
-      .as("cds"))
-
-  /** Assign each new row to its nearest frozen cell — stateless,
-    * window-free, bit-equal to [[graft.ext.Similarity.ivfAssignFrozen]].
-    */
-  def assign(batch: DataFrame, packed: DataFrame): DataFrame =
-    batch
-      .withColumn("vfp", expr(vfpExpr))
-      .crossJoin(broadcast(packed))
-      .withColumn("best", expr(
-        "array_min(transform(cds, s -> struct(" +
-          "aggregate(zip_with(vfp, s.carr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x) as dist, " +
-          "s.cell as cell)))"))
-      .select(col("vec_id"), col("best.cell").as("cell"), col("vfp"))
 
   /** New embeddings stream from `embDir`; the quantizer freezes from the
     * persisted centroid parquet at `centDir`; (vec_id, cell, vfp)
@@ -57,10 +35,9 @@ object IvfAppendIngest {
     */
   def start(spark: SparkSession, embDir: String, centDir: String,
       idxDir: String, checkpointDir: String): StreamingQuery = {
-    val packed = packedQuantizer(spark.read.parquet(centDir))
-      .localCheckpoint(true)
+    val cent = spark.read.parquet(centDir).localCheckpoint(true)
     val schema = spark.read.parquet(embDir).schema
-    assign(spark.readStream.schema(schema).parquet(embDir), packed)
+    Similarity.ivfAssignFrozen(spark.readStream.schema(schema).parquet(embDir), cent)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>

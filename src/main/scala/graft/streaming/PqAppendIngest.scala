@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.ext.Similarity
 
 /** Streaming IVF-PQ index maintenance — the ingest twin of
   * [[graft.ext.Similarity.annIvfPqAppend]]'s micro-batch append,
@@ -11,43 +12,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * quantizer, residual-encoded against the FROZEN per-subspace
   * codebooks, and their posting + code rows land directly in the
   * persisted index parquets — no retrain, no rescan of the standing
-  * corpus, no state store. Both model artifacts ride one packed row
-  * each (KBs, broadcast to every micro-batch); the per-row code is a
-  * stateless `array_min` over (cdist, cl) structs, bit-identical to the
-  * batch fold's (cdist, cl) row_number tie-break, so StreamingSpec pins
-  * stream-appended codes ≡ batch-appended codes AND identical ADC
-  * probes through the shared frozen artifacts.
+  * corpus, no state store. Each micro-batch runs the batch operators
+  * themselves — [[graft.ext.Similarity.ivfAssignFrozen]] for the cell,
+  * [[graft.ext.Similarity.pqResidualSubs]] and
+  * [[graft.ext.Similarity.pqEncodeFrozen]] for the codes, all window-free
+  * argmins against broadcast packed artifacts
+  * ([[graft.ext.Quantizer.nearest]]). StreamingSpec pins stream-appended
+  * codes ≡ batch-appended codes AND identical ADC probes through the
+  * shared frozen artifacts.
   */
 object PqAppendIngest {
-
-  /** One row packing the frozen codebook (csub, cl, cw) table (KBs;
-    * broadcast to every micro-batch — [[IvfAppendIngest.packedQuantizer]]'s
-    * shape for the PQ artifact). */
-  def packedCodebooks(cb: DataFrame): DataFrame =
-    cb.agg(collect_list(struct(col("csub"), col("cl"), col("cw"))).as("cbs"))
-
-  /** Residual-encode assigned rows (vec_id, cell, vfp) against the
-    * packed frozen quantizer + codebooks — stateless, window-free,
-    * bit-equal to [[graft.ext.Similarity.pqEncodeFrozen]] (the
-    * lexicographic struct min reproduces the (cdist, cl) tie-break).
-    */
-  def encode(assigned: DataFrame, packedCent: DataFrame,
-      packedCb: DataFrame, nSub: Int, subDim: Int): DataFrame =
-    assigned
-      .crossJoin(broadcast(packedCent))
-      .withColumn("res", expr(
-        "zip_with(vfp, filter(cds, s -> s.cell = cell)[0].carr, (a, b) -> a - b)"))
-      .crossJoin(broadcast(packedCb))
-      .select(col("vec_id"), col("cell"), col("cbs"),
-        posexplode(expr(
-          s"transform(sequence(0, ${nSub - 1}), s -> slice(res, s * $subDim + 1, $subDim))"))
-          .as(Seq("subspace", "sv")))
-      .withColumn("best", expr(
-        "array_min(transform(filter(cbs, c -> c.csub = subspace), c -> struct(" +
-          "aggregate(zip_with(sv, c.cw, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x) as cdist, " +
-          "c.cl as cl)))"))
-      .select(col("vec_id").as("cid"), col("cell"), col("subspace"),
-        col("best.cl").as("code"))
 
   /** New embeddings stream from `embDir`; the quantizer and codebooks
     * freeze from their persisted parquets; (vec_id, cell, vfp) posting
@@ -65,19 +39,19 @@ object PqAppendIngest {
   def start(spark: SparkSession, embDir: String, centDir: String,
       cbDir: String, idxDir: String, codesDir: String,
       checkpointDir: String, nSub: Int = 16, subDim: Int = 4): StreamingQuery = {
-    val packedCent = IvfAppendIngest.packedQuantizer(
-      spark.read.parquet(centDir)).localCheckpoint(true)
-    val packedCb = packedCodebooks(spark.read.parquet(cbDir))
-      .localCheckpoint(true)
+    val cent = spark.read.parquet(centDir).localCheckpoint(true)
+    val cb = spark.read.parquet(cbDir).localCheckpoint(true)
     val schema = spark.read.parquet(embDir).schema
     spark.readStream.schema(schema).parquet(embDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val assigned = IvfAppendIngest.assign(batch, packedCent)
+        val assigned = Similarity.ivfAssignFrozen(batch, cent)
           .localCheckpoint(true)
         assigned.write.mode("append").parquet(idxDir)
-        encode(assigned, packedCent, packedCb, nSub, subDim)
+        Similarity.pqEncodeFrozen(
+            Similarity.pqResidualSubs(assigned, cent, nSub, subDim), cb)
+          .drop("err_fp")
           .write.mode("append").parquet(codesDir)
       }
       .trigger(Trigger.AvailableNow())

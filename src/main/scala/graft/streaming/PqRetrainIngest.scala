@@ -125,9 +125,8 @@ object PqRetrainIngest {
       pqIters: Int = 2): Seq[Int] = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return Seq.empty
-    val packedCent = IvfAppendIngest.packedQuantizer(
-      Snapshots.read(spark, centTable)).localCheckpoint(true)
-    val assigned = IvfAppendIngest.assign(batch, packedCent)
+    val assigned = graft.ext.Similarity.ivfAssignFrozen(batch,
+        Snapshots.read(spark, centTable).localCheckpoint(true))
       .localCheckpoint(true)
     val batchCodes = graft.ext.Similarity.pqEncodeFrozen(
         graft.ext.Similarity.pqResidualSubs(assigned,

@@ -491,8 +491,10 @@ class StreamingSpec extends SparkSpecBase {
       .select("vec_id", "cell", "dist_fp").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     // batch twin: kmeansStep's (new_label, dist_fp) against the same
-    // label-mean centroids — the window argmin and the struct array_min
-    // must agree row for row, ties included
+    // label-mean centroids. Both sides run Quantizer.centroids/nearest;
+    // this pins the streaming path (source, stream-static join, sink)
+    // row for row. VectorExprSpec checks nearest against an independent
+    // row_number argmin.
     val batch = graft.ext.Similarity.kmeansStep(spark, sf())
       .select("vec_id", "new_label", "dist_fp").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -1203,8 +1205,8 @@ class StreamingSpec extends SparkSpecBase {
     }
     assert(fires.flatten.nonEmpty, s"gate never fired: $fires")
     // ---- batch side: the same evolution through the batch operators
-    // (ivfAssignFrozen routing + orderBy/limit seed picks — independent
-    // formulations of the ingest's packed argmin / struct-min)
+    // (ivfAssignFrozen routing, as the ingest routes, + orderBy/limit
+    // seed picks — an independent formulation of the ingest's struct-min)
     val d = (a: String, b: String) =>
       s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
     var centB = sim.cellCentroids(trained).localCheckpoint(true)
@@ -1498,9 +1500,9 @@ class StreamingSpec extends SparkSpecBase {
     assert(Snapshots.versions(spark, centT).size ==
       Snapshots.versions(spark, centT).filter(_ <= vPre).size + 2,
       "each re-center publishes exactly one quantizer version")
-    // ---- batch side: the same evolution through independent
-    // formulations (ivfAssignFrozen routing + orderBy/limit worst pick
-    // vs the ingest's packed argmin + struct-min)
+    // ---- batch side: the same evolution through the batch operators
+    // (ivfAssignFrozen routing, as the ingest routes, + orderBy/limit
+    // worst pick — an independent formulation of the ingest's struct-min)
     val d = (a: String, b: String) =>
       s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
     var centB = sim.cellCentroids(trained).localCheckpoint(true)

@@ -86,6 +86,64 @@ class VectorExprSpec extends SparkSpecBase {
     assert(bad.count() == 0)
   }
 
+  test("Quantizer.nearest equals a row_number argmin (ties to the smaller id) and plans no window or sort") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.expressions.Window
+    import graft.ext.Quantizer
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    def windowsAndSorts(df: DataFrame): Seq[String] =
+      Plans.collect(df.queryExecution.executedPlan) {
+        case p @ (_: WindowExec | _: SortExec) => p.nodeName
+      }
+    // the reference: every (point, centroid) pair scored, then one row per
+    // point key by row_number over (dist, id)
+    def windowArgmin(points: DataFrame, vec: String, cents: DataFrame,
+        id: String, keys: Seq[String], by: Seq[String]): DataFrame = {
+      val paired = if (by.isEmpty) points.crossJoin(cents) else points.join(cents, by)
+      paired
+        .withColumn("dist", expr(
+          s"aggregate(zip_with($vec, carr, (p, q) -> (p - q) * (p - q)), 0L, (acc, z) -> acc + z)"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(keys.map(col): _*).orderBy(col("dist"), col(id))))
+        .filter(col("rn") === 1)
+    }
+    def check(points: DataFrame, vec: String, cents: DataFrame, id: String,
+        keys: Seq[String], by: Seq[String] = Nil): Set[Row] = {
+      val out = keys ++ Seq(id, "dist")
+      val ref = windowArgmin(points, vec, cents, id, keys, by)
+      val got = Quantizer.nearest(points, vec, cents, id, by)
+      val (refRows, gotRows) = (ref.select(out.map(col): _*).collect(),
+        got.select(out.map(col): _*).collect())
+      assert(gotRows.length == refRows.length)
+      assert(gotRows.toSet == refRows.toSet)
+      assert(windowsAndSorts(ref).contains("Window"))
+      assert(windowsAndSorts(got).isEmpty, got.queryExecution.executedPlan.toString)
+      gotRows.toSet
+    }
+    val vfp = graft.engine.Tables.load(spark, sf(), "embeddings").selectExpr("vec_id", "label",
+      "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d) as bigint)) AS vfp")
+    // global: label centroids, every vector against every centroid
+    val labelCents = Quantizer.centroids(vfp, Seq("label"), "vfp")
+    assert(check(vfp.select("vec_id", "vfp"), "vfp", labelCents, "label",
+      keys = Seq("vec_id")).size == vfp.count())
+    // keyed: 16 subspaces of 4 dims, the first 6 vectors' slices as each
+    // subspace's codebook
+    val subs = vfp.select(col("vec_id"), posexplode(expr(
+      "transform(sequence(0, 15), s -> slice(vfp, s * 4 + 1, 4))")).as(Seq("subspace", "sv")))
+    val cb = subs.filter(col("vec_id") < 6)
+      .select(col("subspace"), col("vec_id").as("cl"), col("sv").as("carr"))
+    check(subs, "sv", cb, "cl", keys = Seq("vec_id", "subspace"), by = Seq("subspace"))
+    // a tie: centroids 7 and 3 both sit at squared distance 1
+    val tie = check(Seq((1L, Seq(0L, 0L))).toDF("vec_id", "v"), "v",
+      Seq((7L, Seq(1L, 0L)), (3L, Seq(0L, -1L)), (5L, Seq(3L, 3L))).toDF("cid", "carr"),
+      "cid", keys = Seq("vec_id"))
+    assert(tie == Set(Row(1L, 3L, 1L)))
+  }
+
   test("phash64 equals the block-mean/gradient reference on crafted payloads") {
     import spark.implicits._
     def ref(payload: Array[Byte]): Long = {

@@ -103,6 +103,12 @@ check "extension functions in SQL" "| 2 | 1.0 |" "$out"
 out=$(java $OPENS -Xmx2g -cp "$CP" graft.tools.Diag explain /root/testdata/sf0.001 q4_topk 2>/dev/null)
 check "diag explain" "== Physical Plan ==" "$out"
 
+# 19. plan_diff.py: a dump directory diffed against itself changes nothing
+PLANS=$(mktemp -d)
+java $OPENS -Xmx2g -cp "$CP" graft.tools.Diag explain --out "$PLANS" /root/testdata/sf0.001 q4_topk sim_kmeans_step >/dev/null 2>&1
+out=$(python3 tools/plan_diff.py "$PLANS" "$PLANS")
+check "plan_diff self" "^changed plans: 0 of 2$" "$out"
+
 echo "---"
 echo "$pass passed, $fail failed"
 exit $([ "$fail" = "0" ] && echo 0 || echo 1)
