@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming boilerplate-prefix flagging: the ingest-time twin of
   * [[graft.ext.TextOps.boilerplatePrefix]] (VERDICT r9 item 7). The
@@ -49,23 +49,14 @@ object BoilerplateIngest {
         coalesce(col("hit"), lit(0L)).as("boilerplate"))
 
   /** Model from the static snapshot at `refDir`, documents streamed
-    * from `docsDir`, per-document flags to `outDir/ingest_batch=<id>`
-    * (overwrite per partition — crash replay is idempotent).
+    * from `docsDir`, per-document flags to `outDir`.
+    * Exactly-once under replay: every write goes through [[MicroBatch.write]].
     */
   def start(spark: SparkSession, docsDir: String, refDir: String,
       outDir: String, checkpointDir: String): StreamingQuery = {
     val m = model(spark.read.parquet(refDir)).localCheckpoint(true)
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          processBatch(b.toDF(), m)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$id")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, docsDir), checkpointDir) { (b, id) =>
+      MicroBatch.write(processBatch(b, m), outDir, id)
+    }
   }
 }

@@ -22,11 +22,6 @@ object BootstrapIngest {
     * (columns: event_id, v — micro-units). Complete mode; ≤64 rows.
     */
   def monitor(spark: SparkSession, feedDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(feedDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    Events.bootstrapStates(withOpt.parquet(feedDir))
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Events.bootstrapStates(MicroBatch.source(spark, feedDir, maxFilesPerTrigger))
 }

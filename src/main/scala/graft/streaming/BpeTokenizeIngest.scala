@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming BPE tokenization: the ingest-time twin of
   * [[graft.ext.TextOps.bpeTokenize]] (VERDICT r9 item 7), shaped like
@@ -29,9 +29,8 @@ object BpeTokenizeIngest {
 
   /** Learn the merge table from the static snapshot at `refDir`, then
     * stream documents from `docsDir`, writing each micro-batch's
-    * segmentation stats to `outDir/ingest_batch=<id>` (overwrite per
-    * partition — replay after a crash is idempotent,
-    * [[CdcDedupIngest]]'s convention).
+    * segmentation stats to `outDir`.
+    * Exactly-once under replay: every write goes through [[MicroBatch.write]].
     */
   def start(spark: SparkSession, docsDir: String, refDir: String,
       outDir: String, checkpointDir: String, rounds: Int = 4): StreamingQuery = {
@@ -39,17 +38,8 @@ object BpeTokenizeIngest {
         spark.read.parquet(refDir), rounds)
       .orderBy("round").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          processBatch(b.toDF(), merges)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$id")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, docsDir), checkpointDir) { (b, id) =>
+      MicroBatch.write(processBatch(b, merges), outDir, id)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming token-budget application: the ingest-time twin of
   * [[graft.ext.TextOps.tokenBudgetApply]], shaped like
@@ -26,15 +26,9 @@ object BudgetApplyIngest {
       outDir: String, checkpointDir: String): StreamingQuery = {
     val plan = graft.ext.TextOps.tokenBudgetPlanOf(
       spark.read.parquet(recipeDir)).localCheckpoint(true)
-    val schema = spark.read.parquet(docsDir).schema
-    val in = spark.readStream.schema(schema).parquet(docsDir)
-    graft.ext.TextOps.tokenBudgetApplyWith(in, plan)
-      .filter(col("n_copies") >= 1)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .format("parquet")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.files(
+      graft.ext.TextOps.tokenBudgetApplyWith(MicroBatch.source(spark, docsDir), plan)
+        .filter(col("n_copies") >= 1),
+      outDir, checkpointDir)
   }
 }

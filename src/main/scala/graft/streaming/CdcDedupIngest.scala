@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming content-defined-chunking dedup: the ingest-time twin of
   * [[graft.ext.Multimodal.mediaCdcDedupOn]] (VERDICT r8 item 7),
@@ -20,11 +20,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * and land in a versioned snapshot table.
   *
   * Exactly-once end to end under foreachBatch's at-least-once replay:
-  * the index append OVERWRITES its own `ingest_batch=<id>` partition
-  * (idempotent, no read of the index), and the table commit rides
-  * [[graft.engine.Snapshots.commitWithTxn]] — a replayed micro-batch
-  * re-derives the same survivors, rewrites the same index partition,
-  * and finds its txn mark already covered, touching nothing.
+  * the index append goes through [[MicroBatch.write]], and the table
+  * commit rides [[graft.engine.Snapshots.commitWithTxn]] — a replayed
+  * micro-batch re-derives the same survivors, rewrites the same index
+  * partition, and finds its txn mark already covered, touching nothing.
   *
   * Scale posture: the index is narrow (media_id, ch) rows plus a
   * (media_id, sz) sizes store — chunk hashes, never payload bytes; the
@@ -87,8 +86,7 @@ object CdcDedupIngest {
       batch.join(dups, Seq("media_id"), "left_anti"))
 
     def appendStore(rows: DataFrame, store: String): Unit = batchId match {
-      case Some(id) =>
-        rows.write.mode("overwrite").parquet(s"$indexDir/$store/ingest_batch=$id")
+      case Some(id) => MicroBatch.write(rows, s"$indexDir/$store", id)
       case None =>
         rows.write.mode("append").parquet(s"$indexDir/$store/ingest_batch=adhoc")
     }
@@ -110,19 +108,11 @@ object CdcDedupIngest {
       tableDir: String, checkpointDir: String, appId: String,
       mask: Int = 64, tau: Double = 0.5,
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val schema = spark.read.parquet(mediaDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(mediaDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        val survivors = processBatch(b.toDF(), indexDir, mask, tau, Some(id))
-        SnapshotIngest.ingestBatch(survivors, tableDir, appId, id)
-        graft.engine.Materialize.release(survivors)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, mediaDir, Some(maxFilesPerTrigger)),
+        checkpointDir) { (b, id) =>
+      val survivors = processBatch(b, indexDir, mask, tau, Some(id))
+      SnapshotIngest.ingestBatch(survivors, tableDir, appId, id)
+      graft.engine.Materialize.release(survivors)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Quantizer
 
@@ -29,24 +29,19 @@ object CellAssignIngest {
 
   /** Embeddings stream from `embDir`; centroids freeze from the
     * reference snapshot at `refDir`; (vec_id, cell, dist_fp) rows land
-    * in parquet at `outDir`. Stateless stream — plain append sink, no
-    * foreachBatch needed.
+    * in parquet at `outDir`. Stateless stream — Spark's file sink
+    * ([[MicroBatch.files]], exactly-once), no foreachBatch needed.
     */
   def start(spark: SparkSession, embDir: String, refDir: String,
       outDir: String, checkpointDir: String): StreamingQuery = {
     val cents = Quantizer.centroids(spark.read.parquet(refDir)
         .select(col("label").as("cell"), expr(Quantizer.vfp).as("vfp")), Seq("cell"), "vfp")
       .localCheckpoint(true)
-    val schema = spark.read.parquet(embDir).schema
-    val batch = spark.readStream.schema(schema).parquet(embDir)
+    val batch = MicroBatch.source(spark, embDir)
       .select(col("vec_id"), expr(Quantizer.vfp).as("vfp"))
-    Quantizer.nearest(batch, "vfp", cents, "cell")
-      .select(col("vec_id"), col("cell"), col("dist").as("dist_fp"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .format("parquet")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.files(
+      Quantizer.nearest(batch, "vfp", cents, "cell")
+        .select(col("vec_id"), col("cell"), col("dist").as("dist_fp")),
+      outDir, checkpointDir)
   }
 }

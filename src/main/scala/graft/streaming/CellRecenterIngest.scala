@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.engine.Snapshots
 import graft.ext.Quantizer.l2sq
@@ -126,17 +126,9 @@ object CellRecenterIngest {
   def start(spark: SparkSession, embDir: String, assignTable: String,
       centTable: String, checkpointDir: String,
       appId: String): StreamingQuery = {
-    val schema = spark.read.parquet(embDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), assignTable, centTable, appId, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, embDir, Some(1)), checkpointDir) {
+      (batch, batchId) =>
+        ingestBatch(batch, assignTable, centTable, appId, batchId)
+    }
   }
 }

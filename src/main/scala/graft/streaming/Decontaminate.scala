@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming decontamination: the stream-static twin of
   * [[graft.ext.TextOps.contaminationBloom]]. Documents stream in; each
@@ -68,14 +68,7 @@ object Decontaminate {
 
   def start(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String, probes: Seq[String]): StreamingQuery = {
-    val schema = spark.read.parquet(docsDir).schema
-    val in = spark.readStream.schema(schema).parquet(docsDir)
-    clean(in, probes)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .format("parquet")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.files(clean(MicroBatch.source(spark, docsDir), probes),
+      outDir, checkpointDir)
   }
 }

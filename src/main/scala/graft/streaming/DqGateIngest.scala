@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming data-quality gate: the ingest-time twin of
   * [[Events.dqGate]]. Every micro-batch runs the identical per-row
@@ -16,9 +16,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * This is the FIRST stage a 100 TB event pipeline wants: malformed
   * rows never reach the sessionizers/aggregators downstream, and the
   * quarantine keeps them inspectable instead of silently dropped.
-  * Each micro-batch OVERWRITES its own `ingest_batch=<id>` partition
-  * in both sinks, making replay after a crash idempotent
-  * ([[CdcDedupIngest]]'s convention).
+  * Exactly-once under replay: every write goes through [[MicroBatch.write]].
   */
 object DqGateIngest {
 
@@ -31,18 +29,10 @@ object DqGateIngest {
 
   def start(spark: SparkSession, eventsDir: String, outDir: String,
       quarantineDir: String, checkpointDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(eventsDir).schema
-    spark.readStream.schema(schema).parquet(eventsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val (clean, bad) = processBatch(b.toDF())
-          clean.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$id")
-          bad.write.mode("overwrite").parquet(s"$quarantineDir/ingest_batch=$id")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, eventsDir), checkpointDir) { (b, id) =>
+      val (clean, bad) = processBatch(b)
+      MicroBatch.write(clean, outDir, id)
+      MicroBatch.write(bad, quarantineDir, id)
+    }
   }
 }

@@ -110,40 +110,14 @@ object Events extends EventsExperimentation with EventsForecast {
       |ORDER BY user_id, session_start""".stripMargin
 
   // ---------------------------------------------------- streaming forms
-  /** Parquet file-stream of events from a DIRECTORY of parquet files (the
-    * file source requires a directory, unlike the batch reader). Handles
-    * the source's nanosecond timestamps the same way Tables.load does.
+  /** Parquet file-stream of events from a DIRECTORY of parquet files
+    * ([[MicroBatch.source]]). Handles the source's nanosecond timestamps
+    * the same way Tables.load does.
     */
-  /** Per-(session, directory) schema cache: the probe read costs one
-    * parquet footer fetch per stream SETUP (not per batch), but queries
-    * that build several streams over the same directory (stream-stream
-    * joins, the test suite) were paying it repeatedly for an immutable
-    * schema. ASSUMES the directory's schema is immutable while cached —
-    * the file-stream contract anyway (readers bind one schema for the
-    * query's life). A directory REWRITTEN with a different schema under
-    * the same path (reused tmp dirs, schema evolution) must call
-    * [[invalidateSchemaCache]] first (ADVICE r3); keying by session keeps
-    * one app's probe from leaking into a restarted session's.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
-
-  /** Drop the cached schema for `filesDir` (all sessions) — call after
-    * rewriting a directory in place with a different schema.
-    */
-  def invalidateSchemaCache(filesDir: String): Unit =
-    schemaCache.keySet.removeIf(_._2 == filesDir)
-
   private def eventStream(spark: SparkSession, filesDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, filesDir),
-      key => spark.read.parquet(key._2).schema) // schema probe (one footer fetch)
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    Tables.normalizeTs(withOpt.parquet(filesDir))
+    Tables.normalizeTs(MicroBatch.source(spark, filesDir, maxFilesPerTrigger))
   }
 
   /** Streaming half of the drift monitor: the (day, event_type) counts

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming Gopher-rule filtering: the ingest-time twin of
   * [[graft.ext.TextOps.gopherRules]]. The rule battery is fully
@@ -29,23 +29,12 @@ object GopherIngest {
       .select(col("doc_id"), col("n_tokens"), col("rule_bits"))
 
   /** Documents stream from `docsDir`; survivors to parquet at `outDir`.
-    * Each micro-batch OVERWRITES its own `ingest_batch=<id>` partition,
-    * making replay after a crash idempotent ([[CdcDedupIngest]]'s
-    * convention).
+    * Exactly-once under replay: every write goes through [[MicroBatch.write]].
     */
   def start(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          processBatch(b.toDF())
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$id")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, docsDir), checkpointDir) { (b, id) =>
+      MicroBatch.write(processBatch(b), outDir, id)
+    }
   }
 }

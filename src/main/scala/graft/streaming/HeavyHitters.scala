@@ -40,11 +40,7 @@ object HeavyHitters {
     */
   def tokenStream(spark: SparkSession, docsDir: String, nShards: Int,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(docsDir)
+    MicroBatch.source(spark, docsDir, maxFilesPerTrigger)
       .select(explode(split(col("text"), " ")).as("token"))
       .select(pmod(xxhash64(col("token")), lit(nShards)).cast("int").as("shard"),
         col("token"))

@@ -26,11 +26,7 @@ object HistRollingIngest {
   def histograms(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(dir).as[DayValue]
+    MicroBatch.source(spark, dir, maxFilesPerTrigger).as[DayValue]
       .groupByKey(_.day)
       .mapGroupsWithState[Array[Long], DayHist](
         GroupStateTimeout.NoTimeout()) { (day, rows, state) =>

@@ -32,11 +32,7 @@ object HllRollingIngest {
   def sketches(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(dir).as[DayUser]
+    MicroBatch.source(spark, dir, maxFilesPerTrigger).as[DayUser]
       .groupByKey(_.day)
       .mapGroupsWithState[Array[Byte], DaySketch](
         GroupStateTimeout.NoTimeout()) { (day, rows, state) =>

@@ -58,11 +58,7 @@ object HoltTrendIngest {
   def monitor(spark: SparkSession, dir: String, loHour: Long, hiHour: Long,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(dir).as[TypedHour]
+    MicroBatch.source(spark, dir, maxFilesPerTrigger).as[TypedHour]
       .groupByKey(_.event_type)
       .mapGroupsWithState[Map[Long, Long], HoltRow](
         GroupStateTimeout.NoTimeout()) { (ty, rows, state) =>

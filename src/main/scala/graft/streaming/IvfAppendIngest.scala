@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Similarity
 
@@ -24,26 +24,23 @@ object IvfAppendIngest {
     * persisted centroid parquet at `centDir`; (vec_id, cell, vfp)
     * posting rows APPEND to the index parquet at `idxDir` — the same
     * directory the batch-trained index lives in, so a probe of the
-    * reload sees base ∪ appended. The sink is a foreachBatch plain
-    * parquet append, NOT the streaming parquet sink: the sink's
-    * `_spark_metadata` log would make every batch read of `idxDir`
-    * ignore the pre-existing base-index files. foreachBatch is
-    * at-least-once — a production deployment makes the append
+    * reload sees base ∪ appended. The sink is a plain parquet append,
+    * NOT the streaming parquet sink: the sink's `_spark_metadata` log
+    * would make every batch read of `idxDir` ignore the pre-existing
+    * base-index files; nor [[MicroBatch.write]]: an `ingest_batch=`
+    * directory next to the base index's flat files breaks partition
+    * discovery. AT-LEAST-ONCE: a replayed batch appends its postings
+    * again (StreamingSpec proves it loses no row and adds exactly the
+    * replayed batch's rows). A production deployment makes the append
     * exactly-once by riding [[graft.engine.Snapshots.commitWithTxn]]'s
-    * ledger (graded separately); the AvailableNow maintenance run here
-    * executes each micro-batch once.
+    * ledger.
     */
   def start(spark: SparkSession, embDir: String, centDir: String,
       idxDir: String, checkpointDir: String): StreamingQuery = {
     val cent = spark.read.parquet(centDir).localCheckpoint(true)
-    val schema = spark.read.parquet(embDir).schema
-    Similarity.ivfAssignFrozen(spark.readStream.schema(schema).parquet(embDir), cent)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(idxDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(Similarity.ivfAssignFrozen(MicroBatch.source(spark, embDir), cent),
+        checkpointDir) { (batch, _) =>
+      batch.write.mode("append").parquet(idxDir)
+    }
   }
 }

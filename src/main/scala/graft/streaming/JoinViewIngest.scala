@@ -28,12 +28,8 @@ object JoinViewIngest {
     * (dims…, mv_cnt, mv_sum_price_cents) in complete mode.
     */
   def monitor(spark: SparkSession, deltaDir: String, right: DataFrame,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val d = graft.engine.MatView.joinRegistry("lineitem_orders")
-    val schema = spark.read.parquet(deltaDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    graft.engine.MatView.aggregateJoin(withOpt.parquet(deltaDir), right, d)
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    graft.engine.MatView.aggregateJoin(
+      MicroBatch.source(spark, deltaDir, maxFilesPerTrigger), right,
+      graft.engine.MatView.joinRegistry("lineitem_orders"))
 }

@@ -32,11 +32,7 @@ object MvJoinIngest {
     */
   def monitor(spark: SparkSession, deltaDir: String, orders: DataFrame,
       parts: DataFrame, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(deltaDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(deltaDir)
+    MicroBatch.source(spark, deltaDir, maxFilesPerTrigger)
       .join(orders, "l_orderkey")          // stream-static: ΔS ⋈ R₀
       .join(broadcast(parts), "l_partkey") // dim broadcast
       .groupBy(col("ym"), col("p_brand"))

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Dedup
 
@@ -40,16 +40,15 @@ import graft.ext.Dedup
   * join's shuffle payload. The per-batch join is keyed on (band, bkey)
   * and never touches document text. State lives in the index files, not
   * executor memory, so a restart resumes from the checkpoint + index.
-  * Delivery is foreachBatch's usual at-least-once: a replayed batch
-  * re-derives the same survivor set (self-collisions are excluded from
-  * the index join), and the INDEX appends are replay-idempotent WITHIN
-  * each ingestion path: a streaming batch overwrites its own
-  * ingest_batch=<id> partition, and an ad-hoc re-run anti-joins the
-  * adhoc/legacy partitions it could have written. A doc ingested by the
+  * Delivery: a replayed batch re-derives the same survivor set
+  * (self-collisions are excluded from the index join), and the stream
+  * writes both the index stores and the output through
+  * [[MicroBatch.write]], so the replay overwrites what its first attempt
+  * wrote — exactly-once. An ad-hoc re-run anti-joins the adhoc/legacy
+  * index partitions it could have written. A doc ingested by the
   * stream and then re-submitted ad-hoc (mixing paths, not a replay) CAN
   * duplicate index rows — harmless to dedup semantics, every consumer
-  * distinct()s. The OUTPUT parquet append can still duplicate a replayed
-  * batch — dedupe downstream on doc_id or swap in a transactional sink.
+  * distinct()s.
   */
 object NearDupIngest {
 
@@ -178,8 +177,7 @@ object NearDupIngest {
         }
       }
       batchId match {
-        case Some(id) =>
-          rows.write.mode("overwrite").parquet(s"$path/ingest_batch=$id")
+        case Some(id) => MicroBatch.write(rows, path, id)
         case None =>
           // ad-hoc backfills land in a RESERVED partition of the same
           // ingest_batch=<v> layout the streaming path uses — appending
@@ -240,19 +238,13 @@ object NearDupIngest {
     */
   def start(spark: SparkSession, docsDir: String, indexDir: String,
       outDir: String, checkpointDir: String, tau: Double = 0.5): StreamingQuery = {
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val survivors = processBatch(batch.toDF(), indexDir, tau, Some(batchId))
-        survivors.write.mode("append").parquet(outDir)
+    MicroBatch.run(MicroBatch.source(spark, docsDir), checkpointDir) {
+      (batch, batchId) =>
+        val survivors = processBatch(batch, indexDir, tau, Some(batchId))
+        MicroBatch.write(survivors, outDir, batchId)
         // the staged survivors frame is consumed — drop its blocks too,
         // completing the per-batch zero-residue contract (ADVICE r7)
         graft.engine.Materialize.release(survivors)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 }

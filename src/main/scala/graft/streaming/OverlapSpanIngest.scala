@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming span-decontamination: the ingest-time twin of
   * [[graft.ext.TextOps.overlapSpans]] — THE place the GPT-3 N-token
@@ -35,25 +35,15 @@ object OverlapSpanIngest {
       evalGrams, k, flagSpan)
 
   /** Eval grams from the static snapshot at `refDir`, documents streamed
-    * from `docsDir`, per-document contamination rows to
-    * `outDir/ingest_batch=<id>` (overwrite per partition — crash replay
-    * is idempotent).
+    * from `docsDir`, per-document contamination rows to `outDir`.
+    * Exactly-once under replay: every write goes through [[MicroBatch.write]].
     */
   def start(spark: SparkSession, docsDir: String, refDir: String,
       outDir: String, checkpointDir: String): StreamingQuery = {
     val evalGrams = graft.ext.TextOps.overlapEvalGrams(
       spark.read.parquet(refDir)).localCheckpoint(true)
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          processBatch(b.toDF(), evalGrams)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$id")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, docsDir), checkpointDir) { (b, id) =>
+      MicroBatch.write(processBatch(b, evalGrams), outDir, id)
+    }
   }
 }

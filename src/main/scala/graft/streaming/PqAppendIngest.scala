@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Similarity
 
@@ -28,33 +28,25 @@ object PqAppendIngest {
     * rows APPEND to `idxDir` and (cid, cell, subspace, code) rows to
     * `codesDir` — the same directories the batch-trained index lives
     * in, so an ADC probe of the reload sees base ∪ appended. Plain
-    * foreachBatch parquet appends (the streaming parquet sink's
-    * `_spark_metadata` would hide the pre-existing base files from
-    * batch reads — the [[IvfAppendIngest]] lesson); a production
-    * deployment makes the append exactly-once via
-    * [[graft.engine.Snapshots.commitWithTxn]]'s ledger (graded
-    * separately), and the AvailableNow maintenance run here executes
-    * each micro-batch once.
+    * parquet appends, for the [[IvfAppendIngest]] reasons, so
+    * AT-LEAST-ONCE: a replayed batch appends its postings and codes
+    * again (StreamingSpec proves it loses no row and adds exactly the
+    * replayed batch's rows). A production deployment makes the append
+    * exactly-once via [[graft.engine.Snapshots.commitWithTxn]]'s ledger.
     */
   def start(spark: SparkSession, embDir: String, centDir: String,
       cbDir: String, idxDir: String, codesDir: String,
       checkpointDir: String, nSub: Int = 16, subDim: Int = 4): StreamingQuery = {
     val cent = spark.read.parquet(centDir).localCheckpoint(true)
     val cb = spark.read.parquet(cbDir).localCheckpoint(true)
-    val schema = spark.read.parquet(embDir).schema
-    spark.readStream.schema(schema).parquet(embDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val assigned = Similarity.ivfAssignFrozen(batch, cent)
-          .localCheckpoint(true)
-        assigned.write.mode("append").parquet(idxDir)
-        Similarity.pqEncodeFrozen(
-            Similarity.pqResidualSubs(assigned, cent, nSub, subDim), cb)
-          .drop("err_fp")
-          .write.mode("append").parquet(codesDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, embDir), checkpointDir) { (batch, _) =>
+      val assigned = Similarity.ivfAssignFrozen(batch, cent)
+        .localCheckpoint(true)
+      assigned.write.mode("append").parquet(idxDir)
+      Similarity.pqEncodeFrozen(
+          Similarity.pqResidualSubs(assigned, cent, nSub, subDim), cb)
+        .drop("err_fp")
+        .write.mode("append").parquet(codesDir)
+    }
   }
 }

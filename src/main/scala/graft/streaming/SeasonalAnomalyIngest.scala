@@ -46,11 +46,7 @@ object SeasonalAnomalyIngest {
   def monitor(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(dir)
+    MicroBatch.source(spark, dir, maxFilesPerTrigger)
       .select(
         expr("((dayofweek(ts) + 5) % 7) + 1").cast("long").as("iso_dow"),
         hour(col("ts")).cast("long").as("hh"),

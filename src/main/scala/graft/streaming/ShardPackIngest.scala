@@ -38,11 +38,7 @@ object ShardPackIngest {
   def monitor(spark: SparkSession, filesDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(filesDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(filesDir)
+    MicroBatch.source(spark, filesDir, maxFilesPerTrigger)
       // same byte metric as docsAsMedia's payload: the text's UTF-8 bytes
       .select(expr("doc_id div 1024").as("chunk"),
         col("doc_id").as("media_id"),

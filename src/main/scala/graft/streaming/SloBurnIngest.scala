@@ -47,11 +47,7 @@ object SloBurnIngest {
   def monitor(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(dir)
+    MicroBatch.source(spark, dir, maxFilesPerTrigger)
       .select(expr("unix_micros(date_trunc('hour', ts)) div 3600000000").as("h"),
         when(col("event_type") === "error", 1L).otherwise(0L).as("is_err"))
       .as[HourObs]

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.engine.Snapshots
 
@@ -49,17 +49,9 @@ object SnapshotIngest {
   def start(spark: SparkSession, docsDir: String, tableDir: String,
       checkpointDir: String, appId: String,
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), tableDir, appId, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, docsDir, Some(maxFilesPerTrigger)),
+        checkpointDir) { (batch, batchId) =>
+      ingestBatch(batch, tableDir, appId, batchId)
+    }
   }
 }

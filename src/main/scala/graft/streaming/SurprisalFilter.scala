@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming LM-surprisal quality filtering: the ingest-time twin of
   * [[graft.ext.TextOps.lmSurprisal]], shaped like [[TemperatureMix]] —
@@ -43,25 +43,15 @@ object SurprisalFilter {
     * snapshot at `refDir`, survivors (with their scores) to parquet at
     * `outDir`. The per-doc score is an aggregation over the document's
     * own exploded trigrams, so the stream runs through foreachBatch
-    * (batch-local grouping — no watermark state); each micro-batch
-    * OVERWRITES its own `ingest_batch=<id>` partition, making replay
-    * after a crash idempotent ([[CdcDedupIngest]]'s convention).
+    * (batch-local grouping — no watermark state).
+    * Exactly-once under replay: every write goes through [[MicroBatch.write]].
     */
   def start(spark: SparkSession, docsDir: String, refDir: String,
       outDir: String, checkpointDir: String): StreamingQuery = {
     val model = graft.ext.TextOps.lmModel(
       spark.read.parquet(refDir)).localCheckpoint(true)
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          processBatch(b.toDF(), model)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$id")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, docsDir), checkpointDir) { (b, id) =>
+      MicroBatch.write(processBatch(b, model), outDir, id)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming temperature-based corpus mixing: the ingest-time twin of
   * [[graft.ext.TextOps.mixTemperature]] (VERDICT r8 item 5).
@@ -36,16 +36,8 @@ object TemperatureMix {
       outDir: String, checkpointDir: String): StreamingQuery = {
     val thresholds = graft.ext.TextOps.mixThresholds(
       spark.read.parquet(recipeDir)).localCheckpoint(true)
-    val schema = spark.read.parquet(docsDir).schema
-    val in = spark.readStream.schema(schema).parquet(docsDir)
-    graft.ext.TextOps.mixApply(in, thresholds)
-      .drop("t")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .format("parquet")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.files(mixed(MicroBatch.source(spark, docsDir), thresholds),
+      outDir, checkpointDir)
   }
 
   /** The per-batch frame a custom sink would consume (foreachBatch

@@ -28,11 +28,7 @@ object TwoSampleIngest {
   def counts(spark: SparkSession, dir: String, mid: Long,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(dir).as[Ev]
+    MicroBatch.source(spark, dir, maxFilesPerTrigger).as[Ev]
       .groupByKey(_.q)
       .mapGroupsWithState[(Long, Long), QState](
         GroupStateTimeout.NoTimeout()) { (q, rows, state) =>

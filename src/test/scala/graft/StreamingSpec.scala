@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.streaming.Events
+import graft.streaming.{Events, MicroBatch}
 
 /** Structured Streaming twins must agree with their batch forms: run the
   * streaming pipeline with Trigger.AvailableNow into a memory sink and
@@ -19,6 +20,79 @@ class StreamingSpec extends SparkSpecBase {
       java.nio.file.Paths.get(s"${sf()}/events.parquet"),
       d.resolve("part-0.parquet"))
     d.toString
+  }
+
+  /** Newest committed batch id in checkpoint `ckpt`. */
+  private def lastCommit(ckpt: String): Long =
+    new java.io.File(ckpt, "commits").list()
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).max
+
+  /** Crash harness: deletes the newest `ckpt/commits/<id>` and its
+    * `.crc` — the state a crash after the batch's data write and before
+    * its commit leaves — then restarts the twin, waits for it, and checks
+    * that the batch committed again. Returns the replayed batch id.
+    */
+  private def replayLastBatch(ckpt: String)(restart: => StreamingQuery): Long = {
+    val id = lastCommit(ckpt)
+    val commits = new java.io.File(ckpt, "commits")
+    assert(new java.io.File(commits, id.toString).delete())
+    new java.io.File(commits, s".$id.crc").delete()
+    restart.awaitTermination(180000)
+    assert(new java.io.File(commits, id.toString).exists(), s"batch $id did not re-commit")
+    id
+  }
+
+  /** Row multiset: each distinct row with its count, duplicates kept. */
+  private def rowBag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  private def bagUnion(a: Map[Seq[Any], Int], b: Map[Seq[Any], Int]): Map[Seq[Any], Int] =
+    (a.keySet ++ b.keySet).map(k => k -> (a.getOrElse(k, 0) + b.getOrElse(k, 0))).toMap
+
+  /** Part files under `dir`, as paths relative to it. */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .map(root.relativize(_).toString).toSet
+    finally walk.close()
+  }
+
+  /** Input files of batch `id`, from the file source's log in `ckpt`. */
+  private def batchInputs(ckpt: String, id: Long): Seq[String] = {
+    val log = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(ckpt, "sources", "0", id.toString)), "UTF-8")
+    "\"path\":\"([^\"]+)\"".r.findAllMatchIn(log).map(_.group(1)).toSeq
+  }
+
+  /** Replay check for twins that write through `MicroBatch.write`: the
+    * replay rewrites the batch's `ingest_batch=<id>` part files in every
+    * output dir, and every output keeps its row multiset.
+    */
+  private def assertReplayRewrites(ckpt: String, outDirs: String*)(
+      restart: => StreamingQuery): Unit = {
+    val id = lastCommit(ckpt)
+    def parts(d: String) = dataFiles(d).filter(_.startsWith(s"ingest_batch=$id/"))
+    val before = outDirs.map(d => (rowBag(spark.read.parquet(d)), parts(d)))
+    replayLastBatch(ckpt)(restart)
+    outDirs.zip(before).foreach { case (d, (bag, files)) =>
+      assert(rowBag(spark.read.parquet(d)) == bag, s"$d: rows changed on replay")
+      val now = parts(d)
+      assert(now.nonEmpty && (now intersect files).isEmpty,
+        s"$d/ingest_batch=$id not rewritten: before=$files after=$now")
+    }
+  }
+
+  /** Replay check for twins on Spark's file sink: output rows and part
+    * files are unchanged.
+    */
+  private def assertReplayUnchanged(ckpt: String, outDir: String)(
+      restart: => StreamingQuery): Unit = {
+    val (bag, files) = (rowBag(spark.read.parquet(outDir)), dataFiles(outDir))
+    replayLastBatch(ckpt)(restart)
+    assert(rowBag(spark.read.parquet(outDir)) == bag, s"$outDir: rows changed on replay")
+    assert(dataFiles(outDir) == files, s"$outDir: files changed on replay")
   }
 
   test("streaming windowed counts == batch windowed counts (sf0.001)") {
@@ -408,6 +482,8 @@ class StreamingSpec extends SparkSpecBase {
     val batchKept = Decontaminate.clean(rows.toDF("doc_id", "text"), probes)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == batchKept)
+    assertReplayUnchanged(ckpt, outDir)(
+      Decontaminate.start(spark, inDir, outDir, ckpt, probes))
   }
 
   test("decontamination matches probes of mixed n-gram lengths") {
@@ -454,6 +530,8 @@ class StreamingSpec extends SparkSpecBase {
     // the mix is a strict, non-empty subset — the sampler actually sampled
     val total = spark.read.parquet(docsDir).count()
     assert(streamed.nonEmpty && streamed.size < total)
+    assertReplayUnchanged(ckpt, outDir)(
+      TemperatureMix.start(spark, docsDir, docsDir, outDir, ckpt))
   }
 
   test("streaming hashed classifier == batch scores (stateless scan-side projection)") {
@@ -463,13 +541,9 @@ class StreamingSpec extends SparkSpecBase {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_clf_ck").toString
     spark.read.parquet(s"${sf()}/documents.parquet")
       .repartition(3).write.mode("overwrite").parquet(docsDir)
-    val schema = spark.read.parquet(docsDir).schema
-    val q = graft.ext.TextOps.classifierScoreOn(
-        spark.readStream.schema(schema).parquet(docsDir))
-      .writeStream.option("checkpointLocation", ckpt)
-      .format("parquet").option("path", outDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    MicroBatch.files(graft.ext.TextOps.classifierScoreOn(
+        MicroBatch.source(spark, docsDir)), outDir, ckpt)
+      .awaitTermination(120000)
     val streamed = spark.read.parquet(outDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     val batch = graft.ext.TextOps.classifierHashed(spark, sf()).collect()
@@ -500,6 +574,8 @@ class StreamingSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     assert(streamed.nonEmpty)
+    assertReplayUnchanged(ckpt, outDir)(
+      CellAssignIngest.start(spark, embDir, embDir, outDir, ckpt))
   }
 
   test("streaming IVF index append == batch frozen-cell append; probe-after-append identical") {
@@ -536,6 +612,15 @@ class StreamingSpec extends SparkSpecBase {
       nQueries = 10, k = 5, nprobe = 4, centOverride = Some(cent))
       .collect().map(_.toSeq).toSeq
     assert(probe(idxStream) == probe(idxBatch))
+    // at-least-once: a crash replay loses no row and adds exactly the
+    // replayed batch's postings
+    def bag(p: String) = rowBag(spark.read.parquet(p).select("vec_id", "cell", "vfp"))
+    val before = bag(idxStream)
+    val id = replayLastBatch(ckpt)(
+      IvfAppendIngest.start(spark, newDir, centDir, idxStream, ckpt))
+    val replayed = rowBag(sim.ivfAssignFrozen(
+      spark.read.parquet(batchInputs(ckpt, id): _*), cent))
+    assert(replayed.nonEmpty && bag(idxStream) == bagUnion(before, replayed))
   }
 
   test("streaming PQ index append == batch frozen-codebook append; ADC probe-after-append identical") {
@@ -590,6 +675,23 @@ class StreamingSpec extends SparkSpecBase {
       nQueries = 10, k = 5, nprobe = 4, nSub = nSub, subDim = subDim,
       rerank = 50).collect().map(_.toSeq).toSeq
     assert(probe(idxStream, codesStream) == probe(idxBatch, codesBatch))
+    // at-least-once: a crash replay loses no row and adds exactly the
+    // replayed batch's postings and codes
+    def postingBag = rowBag(spark.read.parquet(idxStream).select("vec_id", "cell", "vfp"))
+    def codeBag = rowBag(spark.read.parquet(codesStream)
+      .select("cid", "cell", "subspace", "code"))
+    val (postingsBefore, codesBefore) = (postingBag, codeBag)
+    val id = replayLastBatch(ckpt)(PqAppendIngest.start(spark, newDir, centDir,
+      cbDir, idxStream, codesStream, ckpt, nSub, subDim))
+    val cent = spark.read.parquet(centDir)
+    val assigned = sim.ivfAssignFrozen(
+      spark.read.parquet(batchInputs(ckpt, id): _*), cent)
+    val replayedCodes = rowBag(sim.pqEncodeFrozen(
+        sim.pqResidualSubs(assigned, cent, nSub, subDim), spark.read.parquet(cbDir))
+      .select("cid", "cell", "subspace", "code"))
+    assert(replayedCodes.nonEmpty)
+    assert(postingBag == bagUnion(postingsBefore, rowBag(assigned)))
+    assert(codeBag == bagUnion(codesBefore, replayedCodes))
   }
 
   test("streaming LM surprisal filter == batch keep set on the same corpus (frozen model)") {
@@ -613,6 +715,8 @@ class StreamingSpec extends SparkSpecBase {
     // a real filter: non-empty, strict subset of the corpus
     val total = spark.read.parquet(docsDir).count()
     assert(streamed.nonEmpty && streamed.size < total)
+    assertReplayRewrites(ckpt, outDir)(
+      SurprisalFilter.start(spark, docsDir, docsDir, outDir, ckpt))
   }
 
   test("streaming budget apply == batch copy counts under the shared plan") {
@@ -635,6 +739,8 @@ class StreamingSpec extends SparkSpecBase {
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     val total = spark.read.parquet(docsDir).count()
     assert(streamed.nonEmpty && streamed.size < total)
+    assertReplayUnchanged(ckpt, outDir)(
+      BudgetApplyIngest.start(spark, docsDir, docsDir, outDir, ckpt))
   }
 
   test("streaming Gopher rule filter == batch keep set on the same corpus") {
@@ -656,6 +762,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     val total = spark.read.parquet(docsDir).count()
     assert(streamed.nonEmpty && streamed.size < total)
+    assertReplayRewrites(ckpt, outDir)(GopherIngest.start(spark, docsDir, outDir, ckpt))
   }
 
   test("streaming CDC chunk dedup == batch pair semantics; replay touches nothing") {
@@ -785,6 +892,9 @@ class StreamingSpec extends SparkSpecBase {
     // 32 band rows per surviving doc
     val bandCounts = bands.groupBy("doc_id").count().collect().map(_.getLong(1))
     assert(bandCounts.forall(_ == 32L), bandCounts.mkString(","))
+    // crash replay of the second batch: output and both index stores unchanged
+    assertReplayRewrites(ckpt, outDir, s"$idxDir/bands.parquet", s"$idxDir/sigs.parquet")(
+      NearDupIngest.start(spark, inDir, idxDir, outDir, ckpt))
   }
 
   test("ad-hoc ingest idempotence reads only the adhoc/legacy partitions (flat cost)") {
@@ -1749,6 +1859,8 @@ class StreamingSpec extends SparkSpecBase {
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     // the merges actually landed somewhere
     assert(streamed.exists(_._4 > 0))
+    assertReplayRewrites(ckpt, outDir)(
+      BpeTokenizeIngest.start(spark, docsDir, docsDir, outDir, ckpt))
     graft.engine.Materialize.sweep(spark)
   }
 
@@ -1776,6 +1888,8 @@ class StreamingSpec extends SparkSpecBase {
       .select("source", "n_shared")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(streamed == batch, s"stream=$streamed batch=$batch")
+    assertReplayRewrites(ckpt, outDir)(
+      BoilerplateIngest.start(spark, docsDir, docsDir, outDir, ckpt))
   }
 
   test("streaming span decontamination == batch overlap spans (frozen eval grams)") {
@@ -1795,6 +1909,8 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     assert(streamed.nonEmpty) // sf0.001 carries 2 contaminated docs
+    assertReplayRewrites(ckpt, outDir)(
+      OverlapSpanIngest.start(spark, docsDir, docsDir, outDir, ckpt))
   }
 
   test("streaming RAKE keywords == batch top-k on the same corpus (frozen word scores)") {
@@ -1814,6 +1930,8 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSet
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     assert(streamed.nonEmpty)
+    assertReplayRewrites(ckpt, outDir)(
+      RakeIngest.start(spark, docsDir, docsDir, outDir, ckpt))
   }
 
   test("streaming Holt trend monitor's final readout equals the batch fold") {
@@ -1942,6 +2060,8 @@ class StreamingSpec extends SparkSpecBase {
     val census = Events.dqGate(spark, sf()).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(census("events.rows.quarantined") == bad.size.toLong)
+    assertReplayRewrites(ckpt, outDir, qDir)(
+      DqGateIngest.start(spark, evDir, outDir, qDir, ckpt))
   }
 
   test("streaming shard-pack: manifest over final chunk emissions == batch manifest") {

@@ -109,6 +109,18 @@ java $OPENS -Xmx2g -cp "$CP" graft.tools.Diag explain --out "$PLANS" /root/testd
 out=$(python3 tools/plan_diff.py "$PLANS" "$PLANS")
 check "plan_diff self" "^changed plans: 0 of 2$" "$out"
 
+# 20. streaming plumbing lives only in streaming/MicroBatch.scala: in
+# src/main code lines (comments stripped) no other file may name the
+# file-stream source, the foreachBatch runner, the AvailableNow trigger or
+# a checkpoint location (grep only, no build needed)
+PLUMBING='readStream|foreachBatch|Trigger\.AvailableNow|checkpointLocation'
+out=$(grep -rnE --include='*.scala' "$PLUMBING" src/main \
+  | grep -v '^src/main/scala/graft/streaming/MicroBatch\.scala:' \
+  | sed -E 's#^([^:]*:[0-9]+:)[[:space:]]*#\1#' \
+  | grep -vE '^[^:]*:[0-9]+:(//|\*|/\*)' \
+  | sed -E 's#[[:space:]]//.*$##' | grep -E "$PLUMBING")
+check "streaming plumbing only in MicroBatch" "^none$" "${out:-none}"
+
 echo "---"
 echo "$pass passed, $fail failed"
 exit $([ "$fail" = "0" ] && echo 0 || echo 1)
