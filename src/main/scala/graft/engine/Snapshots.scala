@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Versioned snapshot store with time travel — the minimal table-format
-  * core under Delta/Iceberg, as ~100 lines over plain parquet:
+  * core under Delta/Iceberg, over plain parquet:
   *
   *  - data files are IMMUTABLE: every commit writes a fresh
   *    writer-unique `data/batch-<v>-<nonce>/` directory and never
@@ -54,6 +54,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Object stores lacking atomic create-if-absent get best-effort
   * exists-check semantics (the Delta-on-S3 caveat; they need an
   * external commit coordinator for strict safety).
+  *
+  * Every mutation goes through ONE commit path (Iceberg's single
+  * producer): [[stage]] writes the immutable data, [[publish]] rebases,
+  * guards and publishes the next manifest. Operations differ only in
+  * the entries they contribute and the [[Guard]] they run.
   */
 object Snapshots {
 
@@ -110,75 +115,7 @@ object Snapshots {
       beforePublish: () => Unit = () => ()): Int = {
     require(bloomFpp == 0.0 || statsCol.nonEmpty,
       "bloomFpp needs statsCol: the manifest bloom rides the stats line")
-    val spark = df.sparkSession
-    // fail fast, before any data is written: the manifest envelope
-    // format carries LONG min/max
-    statsCol.foreach { c =>
-      require(df.schema(c).dataType == org.apache.spark.sql.types.LongType,
-        s"statsCol '$c' must be LONG, got ${df.schema(c).dataType.simpleString}")
-    }
-    val f = fs(spark, dir)
-    // writer-unique batch directory: a dead writer's leftover is plain
-    // garbage (invisible to readers, never collides with a live write),
-    // so no reclaim-by-deletion is needed — the pre-r7 reclaim could
-    // delete a LIVE second writer's in-flight batch. The version prefix
-    // in the name is advisory (the slot this writer first targeted);
-    // the manifest, not the name, decides membership.
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    var v = versions(spark, dir).lastOption.map(_ + 1).getOrElse(0)
-    val batch = s"data/batch-$v-$nonce"
-    df.write.mode("errorifexists").parquet(s"$dir/$batch")
-    val entry = statsLine(spark, dir, batch, statsCol, bloomFpp)
-    beforePublish() // test-injection seam (fires after staging, pre-publish)
-    // the append case carries the rebased-onto version's full entry list
-    // — including its delete lines, so pending row-level deletes survive
-    // an append; a replace commit starts from scratch (deletes folded
-    // into the new state by whatever computed it) EXCEPT the stream-txn
-    // lines, which must outlive any rewrite — dropping them would let a
-    // replayed micro-batch double-commit after a compaction/replace
-    val vBase = v - 1
-    publishLoop(spark, f, dir, nonce, batch, v,
-      prev => s"K\t${if (append) "append" else "replace"}" +:
-        ((if (append) prev.filterNot(isKindLine) else prev.filter(isTxnLine)) :+ entry),
-      // ADVICE r13: an append staged under the pre-rename schema must not
-      // rebase past an R line — its batch line would land AFTER the
-      // rename (readMasked applies no remap to it) while the parquet on
-      // disk carries the old physical name: a silent schema fork. Abort
-      // and let the caller re-stage from the renamed view. A replace is
-      // exempt: it drops R lines and its frame IS the new schema.
-      validateRebase = abortIfRenamed(spark, f, dir, append, vBase, batch))
-  }
-
-  /** Shared append-path rebase guard (ADVICE r13): abort (and reclaim the
-    * staged batch) when a RENAME COLUMN landed between this writer's base
-    * version and the version being rebased onto. The staged data was
-    * written under the pre-rename schema; publishing its line after the R
-    * line would fork the schema silently — readMasked remaps only batch
-    * lines that PRECEDE an R line (the "batch precedes exactly the
-    * R-lines that postdate its write" manifest invariant).
-    */
-  private def abortIfRenamed(spark: SparkSession, f: FileSystem, dir: String,
-      append: Boolean, vBase: Int, stagedRel: String): Int => Unit = {
-    // per-retry memo (ADVICE r14): a version's kind is immutable once
-    // published, and the probed range only GROWS at the top on each
-    // contention round — without the memo a long-history table re-read
-    // O(versions) manifests per rebase. `max(vBase + 1, 0)` makes the
-    // fresh-table case (vBase = -1) explicit: v0 cannot be a rename of
-    // anything, but it CAN be a later writer's publish this writer is
-    // rebasing onto, so it is probed like any other version.
-    var checked = math.max(vBase + 1, 0)
-    latest => if (append) {
-      while (checked <= latest) {
-        if (kindAt(spark, dir, checked).exists(Set("rename", "drop"))) {
-          f.delete(new Path(s"$dir/$stagedRel"), true) // staged batch is garbage
-          throw new IllegalStateException(
-            s"table at $dir was renamed/dropped (v$checked) while the append " +
-              "was in flight — the staged batch carries the pre-change " +
-              "schema; rerun the commit against the new state")
-        }
-        checked += 1
-      }
-    }
+    write(df, dir, "commit", append, statsCol, bloomFpp, beforePublish).get
   }
 
   /** Commit with a CHECK constraint (Delta table constraints / DLT
@@ -222,38 +159,17 @@ object Snapshots {
       mergeSchema: Boolean = false): DataFrame =
     read(spark, dir, versionAsOf(spark, dir, tsMillis), mergeSchema)
 
-  private def isTxnLine(line: String): Boolean = line.startsWith("T\t")
-  private def isKindLine(line: String): Boolean = line.startsWith("K\t")
-
-  /** Commit kind recorded in version `v`'s manifest (`K <kind>` line):
-    * append / replace / delete / optimize / compact / restore / clone.
-    * None on manifests
-    * written before kind marking — treated as append (the conservative
-    * reading: rebasing across an append is always sound for equality
-    * deletes). The marker is what lets an in-flight writer arbitrate a
-    * rebase: content-preserving rewrites (optimize, compact) and
-    * row-adding commits are safe to rebase across, a REPLACE is not —
-    * the rows the writer meant to target may no longer exist.
-    */
-  private[engine] def kindAt(spark: SparkSession, dir: String, v: Int): Option[String] =
-    entriesAt(spark, dir, v).collectFirst { case KindEntry(k) => k }
-
   /** Highest micro-batch id the latest version records for `appId`, or
     * None if the stream never committed here — the idempotence ledger of
     * [[commitWithTxn]] (Delta's txn-appId pattern: the manifest itself
     * remembers how far each named stream got, so the check and the
     * commit are the same atomic unit).
     */
-  def lastTxn(spark: SparkSession, dir: String, appId: String): Option[Long] = {
-    val vs = versions(spark, dir)
-    if (vs.isEmpty) None
-    else entriesAt(spark, dir, vs.last).collectFirst {
-      case TxnEntry(a, b) if a == appId => b
-    }
-  }
+  def lastTxn(spark: SparkSession, dir: String, appId: String): Option[Long] =
+    versions(spark, dir).lastOption.flatMap(v => txnOf(entriesAt(spark, dir, v), appId))
 
-  private case class AlreadyCovered(stored: Long)
-    extends RuntimeException(s"txn already covered at batch $stored")
+  private def txnOf(entries: Seq[ManifestEntry], appId: String): Option[Long] =
+    entries.collectFirst { case TxnEntry(a, b) if a == appId => b }
 
   /** Exactly-once commit for streaming ingest: append `df` as the next
     * version AND record `T <appId> <batchId>` in the same atomic
@@ -270,47 +186,9 @@ object Snapshots {
     * reopen the door to replays.
     */
   def commitWithTxn(df: DataFrame, dir: String, appId: String, batchId: Long,
-      statsCol: Option[String] = None): Option[Int] = {
-    require(appId.nonEmpty && !appId.exists(_.isWhitespace),
-      s"appId must be non-empty with no whitespace: '$appId'")
-    val spark = df.sparkSession
-    statsCol.foreach { c =>
-      require(df.schema(c).dataType == org.apache.spark.sql.types.LongType,
-        s"statsCol '$c' must be LONG, got ${df.schema(c).dataType.simpleString}")
-    }
-    // fast path — a covered replay stages nothing at all
-    if (lastTxn(spark, dir, appId).exists(_ >= batchId)) return None
-    val f = fs(spark, dir)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = versions(spark, dir).lastOption.map(_ + 1).getOrElse(0)
-    val batch = s"data/batch-$v-$nonce"
-    df.write.mode("errorifexists").parquet(s"$dir/$batch")
-    val entry = statsLine(spark, dir, batch, statsCol)
-    try Some(publishLoop(spark, f, dir, nonce, batch, v, { prev =>
-      // re-checked per attempt: losing a publish race to our own replay
-      // twin must abort, not rebase past it
-      prev.foreach { line =>
-        line.split('\t') match {
-          case Array("T", a, b) if a == appId && b.toLong >= batchId =>
-            throw AlreadyCovered(b.toLong)
-          case _ => ()
-        }
-      }
-      "K\tappend" +: (prev.filterNot(isKindLine)
-        .filterNot(_.startsWith(s"T\t$appId\t")) :+ entry :+
-        s"T\t$appId\t$batchId")
-    }, validateRebase =
-      // same pre-rename-schema fork as commit() (ADVICE r13): the
-      // micro-batch re-runs via foreachBatch's at-least-once retry
-      abortIfRenamed(spark, f, dir, append = true, v - 1, batch)))
-    catch {
-      case AlreadyCovered(_) =>
-        // the staged batch is garbage; reclaim it now instead of leaving
-        // it to vacuum's orphan sweep
-        f.delete(new Path(s"$dir/$batch"), true)
-        None
-    }
-  }
+      statsCol: Option[String] = None): Option[Int] =
+    write(df, dir, "commitWithTxn", append = true, statsCol,
+      txn = Some(validTxn(appId, batchId)))
 
   /** Exactly-once REPLACE for streaming maintenance: rewrite the table
     * (same semantics as `commit(append = false)` — prior batch lines
@@ -326,39 +204,49 @@ object Snapshots {
     * re-fire forever; only the ledger can say "already handled").
     */
   def commitReplaceWithTxn(df: DataFrame, dir: String, appId: String,
-      batchId: Long): Option[Int] = {
+      batchId: Long): Option[Int] =
+    write(df, dir, "commitReplaceWithTxn", append = false, statsCol = None,
+      txn = Some(validTxn(appId, batchId)))
+
+  private def validTxn(appId: String, batchId: Long): (String, Long) = {
     require(appId.nonEmpty && !appId.exists(_.isWhitespace),
       s"appId must be non-empty with no whitespace: '$appId'")
+    appId -> batchId
+  }
+
+  /** The three data commits ([[commit]], [[commitWithTxn]],
+    * [[commitReplaceWithTxn]]): stage `df` as one batch and publish it.
+    * An append carries the rebased-onto version's full entry list —
+    * including its delete lines, so pending row-level deletes survive an
+    * append; a replace starts from scratch (deletes folded into the new
+    * state by whatever computed it) EXCEPT the stream-txn lines, which
+    * must outlive any rewrite — dropping them would let a replayed
+    * micro-batch double-commit after a compaction/replace. An append
+    * aborts across a rename or drop ([[SchemaChange]]); a replace is
+    * exempt — it drops R/X lines and its frame IS the new schema.
+    * None only when `txn` is already covered.
+    */
+  private def write(df: DataFrame, dir: String, op: String, append: Boolean,
+      statsCol: Option[String], bloomFpp: Double = 0.0,
+      beforePublish: () => Unit = () => (),
+      txn: Option[(String, Long)] = None): Option[Int] = {
     val spark = df.sparkSession
-    // fast path — a covered replay stages nothing at all
-    if (lastTxn(spark, dir, appId).exists(_ >= batchId)) return None
-    val f = fs(spark, dir)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = versions(spark, dir).lastOption.map(_ + 1).getOrElse(0)
-    val batch = s"data/batch-$v-$nonce"
-    df.write.mode("errorifexists").parquet(s"$dir/$batch")
-    val entry = statsLine(spark, dir, batch, None)
-    // no rename-rebase guard: like commit(append = false), the replace
-    // drops R lines and its frame IS the new schema
-    try Some(publishLoop(spark, f, dir, nonce, batch, v, { prev =>
-      // re-checked per attempt: losing a publish race to our own replay
-      // twin must abort, not rebase past it
-      prev.foreach { line =>
-        line.split('\t') match {
-          case Array("T", a, b) if a == appId && b.toLong >= batchId =>
-            throw AlreadyCovered(b.toLong)
-          case _ => ()
-        }
-      }
-      "K\treplace" +: (prev.filter(isTxnLine)
-        .filterNot(_.startsWith(s"T\t$appId\t")) :+ entry :+
-        s"T\t$appId\t$batchId")
-    }))
-    catch {
-      case AlreadyCovered(_) =>
-        f.delete(new Path(s"$dir/$batch"), true)
-        None
+    // fail fast, before any data is written: the manifest envelope
+    // format carries LONG min/max
+    statsCol.foreach { c =>
+      require(df.schema(c).dataType == org.apache.spark.sql.types.LongType,
+        s"statsCol '$c' must be LONG, got ${df.schema(c).dataType.simpleString}")
     }
+    val base = versions(spark, dir).lastOption.getOrElse(-1)
+    // lazy: publish forces it only once the txn fast path has passed, so
+    // a covered replay stages nothing at all
+    lazy val batch = stage(df, dir, base + 1, statsCol, bloomFpp)
+    try Some(publish(spark, dir, op, if (append) "append" else "replace", base,
+      if (append) SchemaChange else NoGuard, txn, beforePublish,
+      staged = Some(batch)) { prev =>
+      (if (append) prev else prev.collect { case t: TxnEntry => t }) :+ batch
+    })
+    catch { case _: AlreadyCovered => None }
   }
 
   /** Spark's own `BloomFilter.create(expectedNumItems)` default fpp —
@@ -383,75 +271,157 @@ object Snapshots {
     })) DefaultBloomFpp
     else 0.0
 
-  /** The manifest line for a freshly staged batch: bare directory, or
-    * directory + recorded [min, max] envelope of `statsCol`.
+  private def nonce(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** Stage `df` as immutable data under a writer-unique `<prefix>-<v>-<nonce>`
+    * directory (`data/batch` for batches, `deletes/del` for delete keys)
+    * and return its manifest entry: the bare directory, or directory +
+    * the [min, max] envelope of `statsCol` (+ a bloom when `bloomFpp` >
+    * 0). A dead writer's leftover is plain garbage — invisible to
+    * readers, never colliding with a live write, reclaimed by
+    * [[vacuum]]'s orphan sweep — so no reclaim-by-deletion of other
+    * writers' paths is ever needed. The version in the name is advisory
+    * (the slot this writer first targeted); the manifest, not the name,
+    * decides membership.
+    *
+    * The envelope is computed by re-reading the WRITTEN files (one
+    * single-column scan — the once-per-commit price of an envelope that
+    * reflects exactly what landed).
     */
-  private def statsLine(spark: SparkSession, dir: String, batch: String,
-      statsCol: Option[String], bloomFpp: Double = 0.0): String = statsCol match {
-    case None => batch
-    case Some(c) =>
-      import org.apache.spark.sql.functions.{min, max, count, col, lit}
-      val written = spark.read.parquet(s"$dir/$batch")
-      val r = written.agg(min(col(c)), max(col(c)), count(lit(1))).head()
-      if (r.isNullAt(0)) batch
-      else if (bloomFpp <= 0.0) s"$batch\t$c\t${r.getLong(0)}\t${r.getLong(1)}"
-      else {
-        // distributed builder (partial blooms OR-merged — bit-identical
-        // regardless of partitioning), sized from the batch's actual row
-        // count; serialized inline so readers resolve point lookups from
-        // the manifest alone, no file opened
-        val bf = written.stat.bloomFilter(c, math.max(r.getLong(2), 1L), bloomFpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        val b64 = java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
-        s"$batch\t$c\t${r.getLong(0)}\t${r.getLong(1)}\t$b64"
-      }
+  private def stage(df: DataFrame, dir: String, v: Int,
+      statsCol: Option[String] = None, bloomFpp: Double = 0.0,
+      prefix: String = "data/batch"): BatchEntry = {
+    val spark = df.sparkSession
+    val rel = s"$prefix-$v-${nonce()}"
+    df.write.mode("errorifexists").parquet(s"$dir/$rel")
+    statsCol match {
+      case None => BatchEntry(rel, None)
+      case Some(c) =>
+        import org.apache.spark.sql.functions.{min, max, count, col, lit}
+        val written = spark.read.parquet(s"$dir/$rel")
+        val r = written.agg(min(col(c)), max(col(c)), count(lit(1))).head()
+        if (r.isNullAt(0)) BatchEntry(rel, None)
+        else BatchEntry(rel, Some((c, r.getLong(0), r.getLong(1))),
+          Option.when(bloomFpp > 0.0) {
+            // distributed builder (partial blooms OR-merged — bit-identical
+            // regardless of partitioning), sized from the batch's actual
+            // row count; serialized inline so readers resolve point
+            // lookups from the manifest alone, no file opened
+            val bf = written.stat.bloomFilter(c, math.max(r.getLong(2), 1L), bloomFpp)
+            val bos = new java.io.ByteArrayOutputStream()
+            bf.writeTo(bos)
+            java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+          })
+    }
   }
 
-  /** Shared optimistic-commit loop: rebase the manifest onto the current
-    * latest version (recomputed per attempt — a lost race means someone
-    * else's entry landed and `mkEntries` must see it), publish with
-    * create-if-absent, retry on loss. The retry slot derives from
-    * versions() alone (ADVICE r7): a failed publish does NOT imply the
-    * slot is taken — Hadoop rename's false return is overloaded (FS
-    * quirks, source missing), and blindly bumping v would point the next
-    * rebase at a manifest that doesn't exist. If the listing hasn't
-    * advanced, the same slot is retried; the tries cap bounds a
-    * persistently failing filesystem.
+  /** Rebase arbitration: which commit kinds (the `K <kind>` line of each
+    * version published after the writer's base; "unknown" on manifests
+    * predating the marker) abort an in-flight mutation. `what` names the
+    * change in the abort message.
+    *
+    *  - [[SchemaChange]] (appends, ADVICE r13): data staged under the
+    *    pre-rename schema must not rebase past an R/X line — its batch
+    *    line would land AFTER the rename (readMasked applies no remap to
+    *    it) while the parquet on disk carries the old physical name: a
+    *    silent schema fork.
+    *  - [[TargetChange]] ([[deleteRows]]): equality deletes are
+    *    content-addressed, so rebasing across an append, delete, optimize
+    *    or compact is sound; a replace or restore may have removed the
+    *    rows the delete targeted, and a rename/drop would leave the staged
+    *    D line naming a column the schema no longer carries.
+    *  - [[AnyCommit]]: operations whose preconditions or entry lists
+    *    derive from the base version (schema changes, overwrite masks,
+    *    maintenance folds, restore, clone, merge) — any intervening
+    *    commit aborts them and the caller reruns against the new state.
     */
-  private def publishLoop(spark: SparkSession, f: FileSystem, dir: String,
-      nonce: String, stagedRel: String, vStart: Int,
-      mkEntries: Seq[String] => Seq[String],
-      validateRebase: Int => Unit = _ => ()): Int = {
-    var v = vStart
-    var tries = 0
-    var published = false
-    val stagedPath = new Path(s"$dir/$stagedRel")
-    while (!published) {
-      val latest = versions(spark, dir).lastOption
-      // writer-specific rebase arbitration (re-evaluated per attempt with
-      // the version actually being rebased onto): a guard that throws here
-      // aborts the commit before anything is published
-      latest.foreach(validateRebase)
-      v = math.max(v, latest.map(_ + 1).getOrElse(0))
-      val prev = latest.map(readManifestEntries(spark, dir, _)).getOrElse(Seq.empty)
-      // staged-file liveness (ADVICE r7): if the stats re-scan plus a
-      // long contention loop outlasted vacuum's orphan grace window, the
-      // sweep may have deleted the staged directory — publishing a
-      // manifest that references a deleted path would corrupt the
-      // version permanently, so fail the commit loudly instead. Touching
-      // the dir keeps its mtime inside the grace window across retries.
-      require(f.exists(stagedPath),
-        s"staged $stagedRel vanished before publish (vacuum orphan sweep?) — commit aborted")
-      try f.setTimes(stagedPath, System.currentTimeMillis(), -1)
-      catch { case _: java.io.IOException => () } // advisory refresh only
-      published = publishIfAbsent(f, dir, v, nonce, mkEntries(prev))
-      if (!published) {
-        tries += 1
-        require(tries < 64, s"commit contention: 64 failed publishes at $dir")
-      }
+  private case class Guard(what: String, aborts: String => Boolean)
+  private val NoGuard = Guard("", _ => false)
+  private val SchemaChange = Guard("renamed/dropped", Set("rename", "drop"))
+  private val TargetChange =
+    Guard("replaced/renamed/dropped", Set("replace", "restore", "rename", "drop"))
+  private val AnyCommit = Guard("advanced", _ => true)
+
+  private final class AlreadyCovered extends RuntimeException("txn already covered")
+
+  /** The one optimistic commit loop. Each attempt lists the versions,
+    * parses the latest manifest once, runs `guard` over every version
+    * published since `base` (the version the caller's inputs were read
+    * at; -1 for a fresh table), checks the stream-txn mark, and publishes
+    * `K <kind>` + `next(latest entries)` + the txn mark at the next free
+    * slot with create-if-absent; a lost slot retries. `next` sees the
+    * latest entries without their K line (a kind is never carried
+    * forward) and without `txn`'s own T line (replaced in place).
+    *
+    *  - Guard memo (ADVICE r14): a version's kind is immutable once
+    *    published and the probed range only grows at the top, so each
+    *    version is probed once per call, not once per retry.
+    *  - Txn (Delta's txn-appId): a covered `(appId, batchId)` returns
+    *    before staging; re-checked per attempt, so losing a publish race
+    *    to our own replay twin aborts instead of rebasing past it.
+    *  - Retry slot (ADVICE r7): derived from the listing alone. A failed
+    *    publish does not imply the slot is taken — Hadoop rename's false
+    *    return is overloaded — so an unadvanced listing retries the same
+    *    slot; 64 failures abort.
+    *  - Staged liveness (ADVICE r7): if the stats re-scan plus a long
+    *    contention loop outlasted vacuum's orphan grace window, the sweep
+    *    may have deleted the staged path; publishing a manifest that
+    *    references it would corrupt the version, so the commit fails.
+    *    Touching the path keeps its mtime inside the grace window.
+    *
+    * Every abort reclaims the staged path and throws
+    * IllegalStateException naming `op` ([[AlreadyCovered]] for a covered
+    * txn). Entries render to text only for the coordinator.
+    */
+  private def publish(spark: SparkSession, dir: String, op: String,
+      kind: String, base: Int, guard: Guard,
+      txn: Option[(String, Long)] = None,
+      beforePublish: () => Unit = () => (),
+      staged: => Option[ManifestEntry] = None)(
+      next: Seq[ManifestEntry] => Seq[ManifestEntry]): Int = {
+    val f = fs(spark, dir)
+    def covered(entries: Seq[ManifestEntry]): Boolean =
+      txn.exists { case (a, b) => txnOf(entries, a).exists(_ >= b) }
+    if (txn.nonEmpty && base >= 0 && covered(entriesAt(spark, dir, base)))
+      throw new AlreadyCovered
+    val stagedPath = staged.map(e => new Path(s"$dir/${e.path}"))
+    beforePublish() // test-injection seam (fires after staging, pre-publish)
+    def reclaim(): Unit = stagedPath.foreach(f.delete(_, true))
+    def abort(reason: String): Nothing = {
+      reclaim()
+      throw new IllegalStateException(s"$reason — rerun $op against the new state")
     }
-    v
+    val tmpNonce = nonce()
+    var slot = base + 1
+    var checked = base + 1
+    var tries = 0
+    while (true) {
+      val latest = versions(spark, dir).lastOption.getOrElse(-1)
+      val prev = if (latest < 0) Seq.empty else entriesAt(spark, dir, latest)
+      while (checked <= latest) {
+        val k = kindOf(if (checked == latest) prev else entriesAt(spark, dir, checked))
+        if (guard.aborts(k)) abort(s"table at $dir was ${guard.what} " +
+          s"(v$checked is a '$k' commit) while $op was in flight")
+        checked += 1
+      }
+      if (covered(prev)) { reclaim(); throw new AlreadyCovered }
+      stagedPath.foreach { p =>
+        if (!f.exists(p))
+          abort(s"staged $p vanished before publish (vacuum orphan sweep?)")
+        try f.setTimes(p, System.currentTimeMillis(), -1)
+        catch { case _: java.io.IOException => () } // advisory refresh only
+      }
+      slot = math.max(slot, latest + 1)
+      val body = KindEntry(kind) +: (next(prev.filter {
+        case _: KindEntry => false
+        case TxnEntry(a, _) => !txn.exists(_._1 == a)
+        case _ => true
+      }) ++ txn.map { case (a, b) => TxnEntry(a, b) })
+      if (coordinator.publishIfAbsent(f, dir, slot, tmpNonce, body.map(render))) return slot
+      tries += 1
+      if (tries >= 64) abort(s"commit contention: 64 failed publishes at $dir")
+    }
+    slot
   }
 
   /** Row-level DELETE as a metadata commit — the capability that stops a
@@ -479,12 +449,12 @@ object Snapshots {
     * preserving rewrites: the folded batch carries the same live rows,
     * and re-applying already-folded keys is idempotent) is safe. A
     * REPLACE is not — the rows this delete targeted may be gone and the
-    * replacement's rows were never in the caller's view — so the loop
-    * reads each intervening manifest's [[kindAt]] marker and aborts
-    * loudly, leaving the table untouched; the caller re-runs against the
-    * new state. This is the "does my target still exist post-rebase"
-    * re-validation, expressed at the level equality deletes live at:
-    * commit content classes, not batch paths.
+    * replacement's rows were never in the caller's view — so the
+    * [[TargetChange]] guard aborts loudly, leaving the table untouched;
+    * the caller re-runs against the new state. This is the "does my
+    * target still exist post-rebase" re-validation, expressed at the
+    * level equality deletes live at: commit content classes, not batch
+    * paths.
     *
     * `beforePublish` is a test-injection seam (fires after the key file
     * is staged, before the first publish attempt) so specs can
@@ -494,7 +464,6 @@ object Snapshots {
       beforePublish: () => Unit = () => ()): Int = {
     val spark = keys.sparkSession
     import org.apache.spark.sql.functions.col
-    val f = fs(spark, dir)
     require(versions(spark, dir).nonEmpty, s"no snapshot table at $dir")
     // a delete line on a column the table doesn't carry would poison
     // every future read (the anti-join fails at scan time) — fail the
@@ -506,30 +475,11 @@ object Snapshots {
     require(read(spark, dir, mergeSchema = true).columns.contains(keyCol),
       s"delete key column '$keyCol' not in table at $dir")
     val vEntry = versions(spark, dir).last
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = vEntry + 1
-    val rel = s"deletes/del-$v-$nonce"
-    keys.select(col(keyCol)).write.mode("errorifexists").parquet(s"$dir/$rel")
-    beforePublish()
-    publishLoop(spark, f, dir, nonce, rel, v,
-      prev => s"K\tdelete" +: (prev.filterNot(isKindLine) :+ s"D\t$rel\t$keyCol"),
-      validateRebase = { latest =>
-        ((vEntry + 1) to latest).foreach { w =>
-          // a RESTORE is a replace for arbitration purposes: the rows
-          // this delete targeted may have been rewound away. A RENAME is
-          // unsafe too (ADVICE r13): the staged D line names the
-          // pre-rename column, and rebasing it past the R line would
-          // publish an anti-join on a column the renamed schema no
-          // longer carries — poisoning every subsequent read
-          if (kindAt(spark, dir, w).exists(Set("replace", "restore", "rename", "drop"))) {
-            f.delete(new Path(s"$dir/$rel"), true) // staged keys are garbage
-            throw new IllegalStateException(
-              s"table at $dir was replaced/renamed (v$w) while the delete " +
-                "was in flight — the delete's target/key may no longer " +
-                "exist under that name; rerun deleteRows against the new state")
-          }
-        }
-      })
+    val keyFile = DeleteEntry(
+      stage(keys.select(col(keyCol)), dir, vEntry + 1, prefix = "deletes/del").batch,
+      keyCol)
+    publish(spark, dir, "deleteRows", "delete", vEntry, TargetChange,
+      beforePublish = beforePublish, staged = Some(keyFile))(_ :+ keyFile)
   }
 
   /** RENAME COLUMN without rewriting a byte (Delta column-mapping
@@ -559,7 +509,6 @@ object Snapshots {
     */
   def renameColumn(spark: SparkSession, dir: String, from: String,
       to: String): Int = {
-    val f = fs(spark, dir)
     require(versions(spark, dir).nonEmpty, s"no snapshot table at $dir")
     require(from != to, s"rename to the same name '$from' is a no-op — refused")
     val schema = read(spark, dir, mergeSchema = true).columns.toSet
@@ -567,31 +516,16 @@ object Snapshots {
       s"rename source column '$from' not in table at $dir")
     require(!schema.contains(to),
       s"rename target column '$to' already exists at $dir")
-    val vEntry = versions(spark, dir).last
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = vEntry + 1
-    // stagedRel = "": a pure-metadata commit stages no file, so the
-    // loop's staged-liveness probe degenerates to the table root
-    // (always present) and its mtime refresh is a harmless touch
-    publishLoop(spark, f, dir, nonce, stagedRel = "", v,
-      prev => {
-        val remapped = prev.filterNot(isKindLine).map(parseEntry).map {
-          case b @ BatchEntry(_, Some((c, mn, mx)), _) if c == from =>
-            render(b.copy(stats = Some((to, mn, mx))))
-          case m: MaskEntry if m.col == from => render(m.copy(col = to))
-          case d: DeleteEntry if d.keyCol == from => render(d.copy(keyCol = to))
-          case e => render(e)
-        }
-        s"K\trename" +: (remapped :+ s"R\t$from\t$to")
-      },
-      validateRebase = { latest =>
-        if (latest > vEntry) {
-          throw new IllegalStateException(
-            s"table at $dir advanced (v$latest) while the rename was in " +
-              "flight — the from/to preconditions were validated against " +
-              s"v$vEntry; rerun renameColumn against the new state")
-        }
-      })
+    publish(spark, dir, "renameColumn", "rename",
+      versions(spark, dir).last, AnyCommit) { prev =>
+      prev.map {
+        case b @ BatchEntry(_, Some((c, mn, mx)), _) if c == from =>
+          b.copy(stats = Some((to, mn, mx)))
+        case m: MaskEntry if m.col == from => m.copy(col = to)
+        case d: DeleteEntry if d.keyCol == from => d.copy(keyCol = to)
+        case e => e
+      } :+ RenameEntry(from, to)
+    }
   }
 
   /** DROP COLUMN without rewriting a byte (Delta drop-column semantics):
@@ -615,7 +549,6 @@ object Snapshots {
     * base version aborts the drop and the caller reruns.
     */
   def dropColumn(spark: SparkSession, dir: String, colName: String): Int = {
-    val f = fs(spark, dir)
     require(versions(spark, dir).nonEmpty, s"no snapshot table at $dir")
     val schema = read(spark, dir, mergeSchema = true).columns.toSeq
     require(schema.contains(colName),
@@ -633,25 +566,13 @@ object Snapshots {
             "before dropping the column")
       case _ => ()
     }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = vEntry + 1
-    publishLoop(spark, f, dir, nonce, stagedRel = "", v,
-      prev => {
-        val remapped = prev.filterNot(isKindLine).map(parseEntry).map {
-          case b @ BatchEntry(_, Some((c, _, _)), _) if c == colName =>
-            render(b.copy(stats = None, bloom = None))
-          case e => render(e)
-        }
-        s"K\tdrop" +: (remapped :+ s"X\t$colName")
-      },
-      validateRebase = { latest =>
-        if (latest > vEntry) {
-          throw new IllegalStateException(
-            s"table at $dir advanced (v$latest) while the drop was in " +
-              s"flight — preconditions were validated against v$vEntry; " +
-              "rerun dropColumn against the new state")
-        }
-      })
+    publish(spark, dir, "dropColumn", "drop", vEntry, AnyCommit) { prev =>
+      prev.map {
+        case b @ BatchEntry(_, Some((c, _, _)), _) if c == colName =>
+          b.copy(stats = None, bloom = None)
+        case e => e
+      } :+ DropEntry(colName)
+    }
   }
 
   /** OVERWRITE BY FILTER as a metadata commit (Delta `replaceWhere` /
@@ -690,46 +611,28 @@ object Snapshots {
     require(bad == 0L,
       s"overwriteRange: incoming rows outside $column ∈ [$lo, $hi] — " +
         "commit aborted, nothing staged (replaceWhere contract)")
-    val f = fs(spark, dir)
     val vEntry = versions(spark, dir).last
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = vEntry + 1
-    val batch = s"data/batch-$v-$nonce"
-    df.write.mode("errorifexists").parquet(s"$dir/$batch")
-    val entry = statsLine(spark, dir, batch, statsCol,
+    val batch = stage(df, dir, vEntry + 1, statsCol,
       bloomFppFor(entriesAt(spark, dir, vEntry), statsCol, bloomFpp))
-    beforePublish()
-    publishLoop(spark, f, dir, nonce, batch, v,
-      prev => {
-        val es = prev.map(parseEntry)
-        val dropped = es.collect {
-          case BatchEntry(b, Some((c, mn, mx)), _)
-            if c == column && mn >= lo && mx <= hi => b
-        }.toSet
-        val kept = es.flatMap {
-          case _: KindEntry => None
-          case b: BatchEntry if dropped(b.batch) => None
-          // a batch whose recorded envelope (same column) provably
-          // misses [lo, hi] needs no mask — attaching one anyway
-          // accumulates dead mask lines across repeated overwrites and
-          // splits readMasked into extra per-signature reads (ADVICE r9)
-          case b @ BatchEntry(_, Some((c, mn, mx)), _)
-            if c == column && (mx < lo || mn > hi) => Some(render(b))
-          case b: BatchEntry =>
-            Seq(render(b), render(MaskEntry(b.batch, column, lo, hi)))
-          case m: MaskEntry if dropped(m.batch) => None
-          case e => Some(render(e))
-        }.distinct
-        "K\treplace-where" +: (kept :+ entry)
-      },
-      validateRebase = { latest =>
-        if (latest > vEntry) {
-          f.delete(new Path(s"$dir/$batch"), true) // staged batch is garbage
-          throw new IllegalStateException(
-            s"table at $dir advanced (v$latest) while the overwrite was " +
-              "in flight — rerun overwriteRange against the new state")
-        }
-      })
+    publish(spark, dir, "overwriteRange", "replace-where", vEntry, AnyCommit,
+      beforePublish = beforePublish, staged = Some(batch)) { prev =>
+      val dropped = prev.collect {
+        case BatchEntry(b, Some((c, mn, mx)), _)
+          if c == column && mn >= lo && mx <= hi => b
+      }.toSet
+      prev.flatMap {
+        case b: BatchEntry if dropped(b.batch) => Nil
+        // a batch whose recorded envelope (same column) provably misses
+        // [lo, hi] needs no mask — attaching one anyway accumulates dead
+        // mask lines across repeated overwrites and splits readMasked
+        // into extra per-signature reads (ADVICE r9)
+        case b @ BatchEntry(_, Some((c, mn, mx)), _)
+          if c == column && (mx < lo || mn > hi) => Seq(b)
+        case b: BatchEntry => Seq(b, MaskEntry(b.batch, column, lo, hi))
+        case m: MaskEntry if dropped(m.batch) => Nil
+        case e => Seq(e)
+      }.distinct :+ batch
+    }
   }
 
   /** Fold pending deletes into rewritten data — the maintenance pass that
@@ -743,10 +646,10 @@ object Snapshots {
     * batches — time travel intact until [[vacuum]] reclaims them past the
     * retention window.
     *
-    * Publishes exactly once (no rebase loop): folding is derived from the
-    * version read at entry, and rebasing onto a concurrent commit could
-    * silently drop its batch — a lost race fails loudly instead and the
-    * caller reruns against the new state.
+    * Aborts across ANY concurrent commit ([[AnyCommit]]): folding is
+    * derived from the version read at entry, and rebasing onto a
+    * concurrent commit could silently drop its batch — a lost race fails
+    * loudly instead and the caller reruns against the new state.
     */
   def compactDeletes(spark: SparkSession, dir: String,
       statsCol: Option[String] = None): Int = {
@@ -782,50 +685,38 @@ object Snapshots {
         delCols == Set(c) &&
           delRange.get(c).exists { case (dmn, dmx) => dmx < mn || dmn > mx } }
     }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val vNew = v + 1
-    val newLine: Option[String] =
-      if (rewrite.isEmpty) None
-      else {
-        // masks apply before the delete anti-join (a raw read would
-        // resurrect overwritten rows into the compacted batch)
-        // mergeSchema like optimize's fold: the rewritten batches may
-        // span schemas (evolved appends, a dropColumn boundary) — a
-        // positional union would throw on the width mismatch
-        val folded = delFrames.foldLeft(
-          readMasked(spark, dir, rewrite.map(_.batch), entries,
-            mergeSchema = true)) {
-            case (df, (c, keys)) => df.join(keys, Seq(c), "left_anti")
-          }
-        val rel = s"data/batch-$vNew-$nonce"
-        folded.write.mode("errorifexists").parquet(s"$dir/$rel")
-        Some(statsLine(spark, dir, rel, statsCol,
-          bloomFppFor(entries, statsCol, 0.0)))
-      }
-    // stream-txn marks survive the fold: compaction rewrites data, not
-    // the streams' replay ledger. Untouched batches keep their mask
-    // lines — their files were not rewritten, so the masks still gate
-    // their reads.
-    val untouchedSet = untouched.map(_.batch).toSet
-    val txns = entries.collect { case t: TxnEntry => render(t) }
-    // untouched batch lines, their masks, and rename lines keep their
-    // ORIGINAL relative order: a batch line precedes exactly the renames
-    // that postdate its write, and an untouched batch appended AFTER a
-    // rename must stay after its R line (hoisting R lines to the end
-    // would spuriously rename a later batch's fresh same-named column).
-    // The folded batch goes last — written through the renamed read, so
-    // every carried R line predates it.
-    val carried = entries.collect {
-      case bch: BatchEntry if untouchedSet(bch.batch) => render(bch)
-      case m: MaskEntry if untouchedSet(m.batch) => render(m)
-      case r: RenameEntry => render(r)
-      case x: DropEntry => render(x)
+    // masks apply before the delete anti-join (a raw read would
+    // resurrect overwritten rows into the compacted batch); mergeSchema
+    // like optimize's fold: the rewritten batches may span schemas
+    // (evolved appends, a dropColumn boundary) — a positional union
+    // would throw on the width mismatch
+    val folded = Option.when(rewrite.nonEmpty) {
+      stage(delFrames.foldLeft(
+        readMasked(spark, dir, rewrite.map(_.batch), entries,
+          mergeSchema = true)) {
+          case (df, (c, keys)) => df.join(keys, Seq(c), "left_anti")
+        }, dir, v + 1, statsCol, bloomFppFor(entries, statsCol, 0.0))
     }
-    val ok = publishIfAbsent(f = fs(spark, dir), dir = dir, v = vNew,
-      nonce = nonce,
-      batches = "K\tcompact" +: (carried ++ newLine.toSeq ++ txns))
-    require(ok, s"concurrent commit during compactDeletes at $dir — rerun compaction")
-    vNew
+    val untouchedSet = untouched.map(_.batch).toSet
+    publish(spark, dir, "compactDeletes", "compact", v, AnyCommit,
+      staged = folded) { prev =>
+      // untouched batch lines, their masks (their files were not
+      // rewritten, so the masks still gate their reads), and rename/drop
+      // lines keep their ORIGINAL relative order: a batch line precedes
+      // exactly the renames that postdate its write, and an untouched
+      // batch appended AFTER a rename must stay after its R line
+      // (hoisting R lines to the end would spuriously rename a later
+      // batch's fresh same-named column). The folded batch follows —
+      // written through the renamed read, so every carried R line
+      // predates it — then the stream-txn marks: compaction rewrites
+      // data, not the streams' replay ledger.
+      prev.filter {
+        case b: BatchEntry => untouchedSet(b.batch)
+        case m: MaskEntry => untouchedSet(m.batch)
+        case _: RenameEntry | _: DropEntry => true
+        case _ => false
+      } ++ folded ++ prev.collect { case t: TxnEntry => t }
+    }
   }
 
   /** OPTIMIZE — fold an accumulation of small append batches into one
@@ -845,7 +736,8 @@ object Snapshots {
     * is dominated by file listing/footers; periodic optimize restores
     * scan efficiency without stopping the stream (the publish is the
     * same optimistic commit — a concurrent append wins or loses the
-    * slot cleanly; a lost race here fails loudly like compactDeletes).
+    * slot cleanly; a lost race here aborts like compactDeletes and
+    * reclaims the folded batch).
     */
   def optimize(spark: SparkSession, dir: String,
       statsCol: Option[String] = None, maxBatches: Int = 1): Int = {
@@ -854,26 +746,6 @@ object Snapshots {
     val entries = entriesAt(spark, dir, v)
     val batches = entries.collect { case b: BatchEntry => b }
     if (batches.size <= maxBatches) return v
-    val carried = entries.collect {
-      case d: DeleteEntry => render(d)
-      case t: TxnEntry => render(t)
-      // rename lines DROP here, like mask lines: optimize folds EVERY
-      // batch, the folded data is written through the renamed read, so
-      // the logical names are baked into the rewrite and no old-named
-      // file survives for an R line to act on (older versions keep
-      // their own manifests for time travel)
-    }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val vNew = v + 1
-    val rel = s"data/batch-$vNew-$nonce"
-    // mergeSchema: on an evolved table the folded batches may span
-    // schemas — a plain union-by-position read would drop the columns
-    // only the newer batches carry. Masks apply during the fold (a raw
-    // read would resurrect overwritten rows) and are thereby baked into
-    // the folded batch — the new manifest carries no mask lines.
-    readMasked(spark, dir, batches.map(_.batch), entries,
-      mergeSchema = true)
-      .write.mode("errorifexists").parquet(s"$dir/$rel")
     // keep pruning envelopes alive across the rewrite: when the caller
     // passes no statsCol but every existing envelope agrees on one
     // column, re-derive stats on that column for the folded batch
@@ -883,12 +755,26 @@ object Snapshots {
         case _ => None
       }
     }
-    val line = statsLine(spark, dir, rel, inferred,
-      bloomFppFor(entries, inferred, 0.0))
-    val ok = publishIfAbsent(fs(spark, dir), dir, vNew, nonce,
-      "K\toptimize" +: line +: carried)
-    require(ok, s"concurrent commit during optimize at $dir — rerun optimize")
-    vNew
+    // mergeSchema: on an evolved table the folded batches may span
+    // schemas — a plain union-by-position read would drop the columns
+    // only the newer batches carry. Masks apply during the fold (a raw
+    // read would resurrect overwritten rows) and are thereby baked into
+    // the folded batch — the new manifest carries no mask lines.
+    val folded = stage(
+      readMasked(spark, dir, batches.map(_.batch), entries, mergeSchema = true),
+      dir, v + 1, inferred, bloomFppFor(entries, inferred, 0.0))
+    publish(spark, dir, "optimize", "optimize", v, AnyCommit,
+      staged = Some(folded)) { prev =>
+      // rename lines DROP here, like mask lines: optimize folds EVERY
+      // batch, the folded data is written through the renamed read, so
+      // the logical names are baked into the rewrite and no old-named
+      // file survives for an R line to act on (older versions keep
+      // their own manifests for time travel)
+      folded +: prev.collect {
+        case d: DeleteEntry => d
+        case t: TxnEntry => t
+      }
+    }
   }
 
   /** RESTORE — rewind the table's CURRENT state to an earlier version as
@@ -908,7 +794,7 @@ object Snapshots {
     * ledger must never rewind, or a restarted stream would double-commit
     * micro-batches the restored-away versions had recorded.
     *
-    * Publishes exactly once (no rebase loop, same rule as [[optimize]]):
+    * Aborts across any concurrent commit (same rule as [[optimize]]):
     * the restored entry list is derived from the version read at entry,
     * and rebasing onto a concurrent commit would silently discard it — a
     * lost race fails loudly and the caller re-runs against the new state.
@@ -925,22 +811,11 @@ object Snapshots {
     require(vs.contains(version), s"no version $version at $dir")
     val vLatest = vs.last
     if (version == vLatest) return vLatest
-    val target = entriesAt(spark, dir, version).collect {
-      case b: BatchEntry => render(b)
-      case d: DeleteEntry => render(d)
-      case m: MaskEntry => render(m) // restored state keeps its masks
-      case r: RenameEntry => render(r) // and its column names
-      case x: DropEntry => render(x)
+    // the restored state keeps its masks and its column names
+    val target = stateOf(entriesAt(spark, dir, version), identity)
+    publish(spark, dir, "restore", "restore", vLatest, AnyCommit) { prev =>
+      target ++ prev.collect { case t: TxnEntry => t }
     }
-    val txns = entriesAt(spark, dir, vLatest).collect {
-      case t: TxnEntry => render(t)
-    }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val vNew = vLatest + 1
-    val ok = publishIfAbsent(fs(spark, dir), dir, vNew, nonce,
-      s"K\trestore" +: (target ++ txns))
-    require(ok, s"concurrent commit during restore at $dir — rerun restore")
-    vNew
   }
 
   /** Manifest-stats pruned read: batches whose recorded [min, max]
@@ -968,11 +843,11 @@ object Snapshots {
     // result == plain filter at the same version — which the plain read
     // only satisfies schema-merged
     val base =
-      if (kept.isEmpty) read(spark, dir, v, mergeSchema).limit(0) // schema-preserving empty
+      if (kept.isEmpty) readEntries(spark, dir, entries, mergeSchema).limit(0) // schema-preserving empty
       else readMasked(spark, dir, kept, entries, mergeSchema)
     // row-level deletes apply here too: pruned result == plain filter at
     // the same version, and the plain read anti-joins the delete keys
-    applyDeletes(spark, dir, v, base)
+    applyDeletes(spark, dir, entries, base)
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -991,7 +866,12 @@ object Snapshots {
   def pointBatches(spark: SparkSession, dir: String, column: String,
       keys: Seq[Long], version: Int = -1): Seq[String] = {
     val v = if (version < 0) latestVersion(spark, dir) else version
-    batchesAt(spark, dir, v).filter { e =>
+    pointFilter(entriesAt(spark, dir, v), column, keys)
+  }
+
+  private def pointFilter(entries: Seq[ManifestEntry], column: String,
+      keys: Seq[Long]): Seq[String] =
+    entries.collect { case b: BatchEntry => b }.filter { e =>
       e.stats match {
         case None => true
         case Some((c, _, _)) if c != column => true
@@ -1007,7 +887,6 @@ object Snapshots {
           })
       }
     }.map(_.batch)
-  }
 
   /** Point lookup through the manifest blooms ([[pointBatches]]): read
     * only the surviving batch directories, then apply the exact filter
@@ -1022,12 +901,12 @@ object Snapshots {
       mergeSchema: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     val v = if (version < 0) latestVersion(spark, dir) else version
-    val kept = pointBatches(spark, dir, column, keys, v)
+    val entries = entriesAt(spark, dir, v)
+    val kept = pointFilter(entries, column, keys)
     val base =
-      if (kept.isEmpty) read(spark, dir, v, mergeSchema).limit(0)
-      else readMasked(spark, dir, kept,
-        entriesAt(spark, dir, v), mergeSchema)
-    applyDeletes(spark, dir, v, base)
+      if (kept.isEmpty) readEntries(spark, dir, entries, mergeSchema).limit(0)
+      else readMasked(spark, dir, kept, entries, mergeSchema)
+    applyDeletes(spark, dir, entries, base)
       .filter(col(column).isin(keys: _*))
   }
 
@@ -1063,46 +942,56 @@ object Snapshots {
     require(versions(spark, dstDir).isEmpty,
       s"clone target $dstDir is already a snapshot table")
     val v = if (version < 0) latestVersion(spark, srcDir) else version
-    val entries = entriesAt(spark, srcDir, v).collect {
-      case b: BatchEntry => render(b.copy(batch = resolve(srcDir, b.batch)))
-      case d: DeleteEntry => render(d.copy(path = resolve(srcDir, d.path)))
-      case r: RenameEntry => render(r)
-      case x: DropEntry => render(x)
-      // masks absolutize WITH their batch, or the clone's reads would
-      // resurrect the parent's overwritten rows
-      case m: MaskEntry => render(m.copy(batch = resolve(srcDir, m.batch)))
-    }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val ok = publishIfAbsent(fs(spark, dstDir), dstDir, 0, nonce,
-      s"K\tclone" +: entries)
-    require(ok, s"concurrent writer created $dstDir during clone")
-    0
+    val entries = stateOf(entriesAt(spark, srcDir, v), resolve(srcDir, _))
+    publish(spark, dstDir, "cloneTable", "clone", -1, AnyCommit)(_ => entries)
+  }
+
+  /** A version's table state — batch, delete, mask, rename and drop
+    * entries in manifest order, without its kind and stream-txn marks —
+    * with every data path mapped through `relocate`. Masks move WITH
+    * their batch, or reads would resurrect overwritten rows.
+    */
+  private def stateOf(entries: Seq[ManifestEntry],
+      relocate: String => String): Seq[ManifestEntry] = entries.collect {
+    case b: BatchEntry => b.copy(batch = relocate(b.batch))
+    case d: DeleteEntry => d.copy(path = relocate(d.path))
+    case m: MaskEntry => m.copy(batch = relocate(m.batch))
+    case r: RenameEntry => r
+    case x: DropEntry => x
   }
 
   /** VACUUM — Delta's file vacuum and log retention in one pass:
     * physically delete every data path (batch dirs under `data/`,
-    * delete-key dirs under `deletes/`) that no manifest inside the
-    * retained window references — INCLUDING orphan directories left by
-    * aborted commits, which no manifest ever named (caught by the
-    * physical listing, exactly why real vacuums list the directory
-    * instead of diffing logs; orphans only go once older than
-    * `orphanGraceMs`, since a live writer's in-flight staging dir is
-    * physically indistinguishable from an aborted one — the keepFrom
-    * overload's retention-interval contract) — then drop the
-    * pre-retention manifests,
-    * so time travel beyond the horizon fails explicitly instead of
-    * reading files that may be gone. Retention is by VERSION COUNT
-    * (keep the newest `keepVersions`); production keys the same
-    * mechanics on commit timestamps. A shallow clone's absolute
-    * (parent-owned) entries are never deleted — the clone doesn't own
-    * them; conversely the parent's vacuum can't see the clone (cloning
-    * pins no lease — the documented shallow-clone caveat, same as
-    * Delta's). Metadata-plane cost: manifests are KBs and the listing
-    * is one RPC per prefix; the deletes are the only data-plane work.
+    * delete-key dirs under `deletes/`) that no RETAINED manifest
+    * references, then drop the pre-retention manifests, so time travel
+    * beyond the horizon fails explicitly instead of reading files that
+    * may be gone; reads at retained versions are untouched (their file
+    * lists don't change). Retention is by version COUNT (keep the newest
+    * `keepVersions`) or by WATERMARK (keep versions >= `keepFrom`);
+    * production keys the same mechanics on commit timestamps. Tagged
+    * versions are pinned either way ([[tag]]).
     *
-    * Returns (nPathsRemoved, nPathsLive).
+    * Also sweeps ORPHANS: data written by a writer that died (or gave
+    * up) before publishing appears in no manifest and would otherwise
+    * leak forever (writer-unique names mean nothing ever reclaims the
+    * path) — caught by the physical listing, exactly why real vacuums
+    * list the directory instead of diffing logs. Only orphans older than
+    * `orphanGraceMs` go: a LIVE writer's in-flight staging is physically
+    * indistinguishable from an aborted one and always younger than the
+    * grace window (Delta VACUUM's retention-interval contract, applied
+    * to staging data; ADVICE r11).
+    *
+    * A shallow clone's absolute (parent-owned) entries are never deleted
+    * or reported — the clone doesn't own them; conversely the parent's
+    * vacuum can't see the clone (cloning pins no lease — the documented
+    * shallow-clone caveat, same as Delta's). A MERGED branch refuses to
+    * vacuum ([[mergeBranch]]). Metadata-plane cost: manifests are KBs
+    * and the listing is one RPC per prefix; the deletes are the only
+    * data-plane work.
+    *
+    * The `keepVersions` overloads return (nPathsRemoved, nPathsLive);
+    * the default orphan grace is 1 h.
     */
-  /** Production default: 1 h orphan grace (the keepFrom overload's). */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int): (Int, Int) =
     vacuum(spark, dir, keepVersions, 3600 * 1000)
 
@@ -1113,6 +1002,26 @@ object Snapshots {
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int,
       orphanGraceMs: Int): (Int, Int) = {
     require(keepVersions >= 1, "vacuum must retain at least the latest version")
+    val (removed, live) =
+      vacuumRetaining(spark, dir, orphanGraceMs, _.takeRight(keepVersions))
+    (removed.size, live.size)
+  }
+
+  /** [[vacuum]] by watermark: drops versions below `keepFrom` and
+    * returns the removed paths (dead committed paths, then orphans).
+    */
+  def vacuum(spark: SparkSession, dir: String, keepFrom: Int,
+      orphanGraceMs: Long = 3600L * 1000): Seq[String] =
+    vacuumRetaining(spark, dir, orphanGraceMs, { vs =>
+      require(vs.contains(keepFrom), s"keepFrom=$keepFrom not a version of $dir")
+      vs.filter(_ >= keepFrom)
+    })._1
+
+  /** The one vacuum body: `retain` picks the untagged versions to keep.
+    * Returns (removed paths, live paths of the kept versions).
+    */
+  private def vacuumRetaining(spark: SparkSession, dir: String,
+      orphanGraceMs: Long, retain: Seq[Int] => Seq[Int]): (Seq[String], Set[String]) = {
     val f = fs(spark, dir)
     val vs = versions(spark, dir)
     require(vs.nonEmpty, s"no snapshot table at $dir")
@@ -1134,36 +1043,36 @@ object Snapshots {
     }
     // tagged versions are pinned: a tag promises read(tagVersion(name))
     // reproduces that state, so vacuum must never reclaim it (Iceberg's
-    // ref-protected expiry) — the retention window applies to UNTAGGED
-    // history only
+    // ref-protected expiry) — retention applies to UNTAGGED history only
     val tagged = tags(spark, dir).map(_._2).toSet
-    val keep = (vs.takeRight(keepVersions).toSet ++ tagged.filter(vs.contains))
-      .toSeq.sorted
-    def refsOf(v: Int): Seq[String] =
-      entriesAt(spark, dir, v).map(_.path).filter(_.nonEmpty)
-    val live = keep.flatMap(refsOf).toSet
-    val referenced = vs.flatMap(refsOf).toSet
-    val physical = Seq("data", "deletes").flatMap { prefix =>
-      val p = new Path(s"$dir/$prefix")
-      if (f.exists(p)) f.listStatus(p).toSeq.map(s => s"$prefix/${s.getPath.getName}")
-      else Seq.empty
-    }.toSet
-    val local = (referenced ++ physical)
-      .filterNot(p => p.startsWith("/") || p.contains("://")) // clone parents
-    // never-referenced physical dirs are indistinguishable from a LIVE
-    // writer's in-flight staging — only reclaim them past the grace
-    // window (the keepFrom overload's orphanGraceMs contract, ADVICE
-    // r11); manifest-referenced dead paths were committed and can go now
+    val keep = retain(vs).toSet ++ vs.filter(tagged)
+    // "referenced" spans batch dirs AND delete files — a delete file a
+    // kept version still anti-joins must outlive the vacuum, and one only
+    // dropped manifests reference (e.g. after compactDeletes folded it)
+    // is reclaimed here, completing the delete lifecycle. Masks, txn and
+    // kind marks have empty paths: they reference no file and must never
+    // reach a delete call (an empty relative path resolves to the root).
+    val refs = vs.map(v => v -> entriesAt(spark, dir, v).map(_.path).filter(_.nonEmpty)).toMap
+    val live = vs.filter(keep).flatMap(refs).toSet
+    val referenced = vs.flatMap(refs).distinct
+    // FOREIGN (absolute) entries are a shallow clone's references into
+    // its parent table — never this table's to reclaim
+    val dead = referenced
+      .filterNot(p => live(p) || p.startsWith("/") || p.contains("://"))
+    val known = referenced.toSet
     val cutoff = System.currentTimeMillis() - orphanGraceMs
-    val dead = (local -- live).filter { p =>
-      referenced.contains(p) || {
-        val st = new Path(s"$dir/$p")
-        !f.exists(st) || f.getFileStatus(st).getModificationTime < cutoff
+    val orphans = Seq("data", "deletes").flatMap { sub =>
+      val root = new Path(s"$dir/$sub")
+      if (!f.exists(root)) Seq.empty
+      else f.listStatus(root).toSeq.collect {
+        case st if st.getModificationTime < cutoff &&
+          !known(s"$sub/${st.getPath.getName}") =>
+          s"$sub/${st.getPath.getName}"
       }
     }
-    dead.toSeq.sorted.foreach(p => f.delete(new Path(s"$dir/$p"), true))
-    vs.filterNot(keep.contains).foreach(v => f.delete(manifestPath(dir, v), false))
-    (dead.size, live.size)
+    (dead ++ orphans).foreach(p => f.delete(new Path(s"$dir/$p"), true))
+    vs.filterNot(keep).foreach(v => f.delete(manifestPath(dir, v), false))
+    (dead ++ orphans, live)
   }
 
   /** DESCRIBE HISTORY (Delta's audit surface): one row per version with
@@ -1180,7 +1089,7 @@ object Snapshots {
     val rows = versions(spark, dir).map { v =>
       val es = entriesAt(spark, dir, v)
       (v.toLong,
-        es.collectFirst { case KindEntry(k) => k }.getOrElse("unknown"),
+        kindOf(es),
         es.count(_.isInstanceOf[BatchEntry]).toLong,
         es.count(_.isInstanceOf[DeleteEntry]).toLong,
         es.count(_.isInstanceOf[TxnEntry]).toLong)
@@ -1206,12 +1115,7 @@ object Snapshots {
       s"invalid tag name '$name' (want ${refName.regex})")
     val v = if (version < 0) latestVersion(spark, dir) else version
     require(versions(spark, dir).contains(v), s"no version $v at $dir")
-    val f = fs(spark, dir)
-    f.mkdirs(refsDir(dir))
-    val p = new Path(refsDir(dir), name)
-    // create-if-absent (overwrite = false): immutability is the point
-    val out = f.create(p, false)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
+    writeRef(fs(spark, dir), new Path(refsDir(dir), name), v)
     v
   }
 
@@ -1220,13 +1124,22 @@ object Snapshots {
     val f = fs(spark, dir)
     if (!f.exists(refsDir(dir))) return Seq.empty
     f.listStatus(refsDir(dir)).toSeq.map(_.getPath)
-      .map(p => p.getName -> {
-        val in = f.open(p)
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          "UTF-8").trim.toInt
-        finally in.close()
-      })
+      .map(p => p.getName -> readRef(f, p))
       .sortBy(_._1)
+  }
+
+  /** Tags and fork bases are one-integer files, created once: create-if-
+    * absent (overwrite = false) is what makes them immutable.
+    */
+  private def writeRef(f: FileSystem, p: Path, v: Int): Unit = {
+    val out = f.create(p, false)
+    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readRef(f: FileSystem, p: Path): Int = {
+    val in = f.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt
+    finally in.close()
   }
 
   def tagVersion(spark: SparkSession, dir: String, name: String): Int =
@@ -1265,9 +1178,7 @@ object Snapshots {
     val v = if (version < 0) latestVersion(spark, dir) else version
     val bd = branchDir(dir, name)
     cloneTable(spark, dir, bd, v)
-    val f = fs(spark, dir)
-    val out = f.create(forkBasePath(dir, name), false)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
+    writeRef(fs(spark, dir), forkBasePath(dir, name), v)
     v
   }
 
@@ -1297,12 +1208,7 @@ object Snapshots {
     val bd = branchDir(dir, name)
     val f = fs(spark, dir)
     require(f.exists(forkBasePath(dir, name)), s"no branch '$name' at $dir")
-    val base = {
-      val in = f.open(forkBasePath(dir, name))
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        "UTF-8").trim.toInt
-      finally in.close()
-    }
+    val base = readRef(f, forkBasePath(dir, name))
     val mainHead = latestVersion(spark, dir)
     require(mainHead == base,
       s"non-fast-forward: main advanced $base -> $mainHead since the fork " +
@@ -1316,19 +1222,8 @@ object Snapshots {
     }
     // txn marks deliberately do NOT merge (the clone rationale: the
     // branch is its own ingest lineage; replay state must not leak)
-    val entries = entriesAt(spark, bd, head).collect {
-      case b: BatchEntry => render(b.copy(batch = norm(b.batch)))
-      case d: DeleteEntry => render(d.copy(path = norm(d.path)))
-      case r: RenameEntry => render(r)
-      case x: DropEntry => render(x)
-      case m: MaskEntry => render(m.copy(batch = norm(m.batch)))
-    }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val ok = publishIfAbsent(f, dir, mainHead + 1, nonce,
-      s"K\tmerge" +: entries)
-    require(ok, s"concurrent commit to $dir during merge of '$name' — " +
-      "merge aborted; re-check fast-forward and retry")
-    mainHead + 1
+    val entries = stateOf(entriesAt(spark, bd, head), norm)
+    publish(spark, dir, "mergeBranch", "merge", mainHead, AnyCommit)(_ => entries)
   }
 
   /** All branches as (name, forkBase), name-sorted. */
@@ -1338,12 +1233,8 @@ object Snapshots {
     if (!f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
       .filter(n => f.exists(forkBasePath(dir, n)))
-      .map { n =>
-        val in = f.open(forkBasePath(dir, n))
-        val base = try new String(org.apache.commons.io.IOUtils
-          .toByteArray(in), "UTF-8").trim.toInt finally in.close()
-        n -> base
-      }.sortBy(_._1)
+      .map(n => n -> readRef(f, forkBasePath(dir, n)))
+      .sortBy(_._1)
   }
 
   private sealed trait ManifestEntry { def path: String }
@@ -1388,7 +1279,7 @@ object Snapshots {
   /** The commit-kind marker `K <kind>`: one per manifest, describing the
     * commit that produced THAT version (never carried forward on rebase).
     * No file behind it; exists so concurrent writers can classify what
-    * they are rebasing across ([[kindAt]]).
+    * they are rebasing across ([[Guard]]).
     */
   private case class KindEntry(kind: String) extends ManifestEntry {
     def path: String = ""
@@ -1448,11 +1339,24 @@ object Snapshots {
         s"malformed manifest line: ${other.mkString("\\t")}")
     }
 
-  private def entriesAt(spark: SparkSession, dir: String, v: Int): Seq[ManifestEntry] =
-    readManifestEntries(spark, dir, v).map(parseEntry)
+  /** Version `v`'s manifest, parsed. The body is one entry per line,
+    * tab-separated (JSON-free on purpose — no parser dependency,
+    * trivially greppable).
+    */
+  private def entriesAt(spark: SparkSession, dir: String, v: Int): Seq[ManifestEntry] = {
+    val f = fs(spark, dir)
+    val p = manifestPath(dir, v)
+    require(f.exists(p), s"version $v not found at $dir")
+    val in = f.open(p)
+    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    body.linesIterator.map(_.trim).filter(_.nonEmpty).map(parseEntry).toVector
+  }
 
-  private def batchesAt(spark: SparkSession, dir: String, v: Int): Seq[BatchEntry] =
-    entriesAt(spark, dir, v).collect { case b: BatchEntry => b }
+  /** Commit kind of a parsed manifest (its `K` line; "unknown" on
+    * manifests predating the marker).
+    */
+  private def kindOf(entries: Seq[ManifestEntry]): String =
+    entries.collectFirst { case KindEntry(k) => k }.getOrElse("unknown")
 
   private def masksOf(entries: Seq[ManifestEntry]): Map[String, Seq[MaskEntry]] =
     entries.collect { case m: MaskEntry => m }.groupBy(_.batch)
@@ -1515,15 +1419,15 @@ object Snapshots {
     frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = mergeSchema))
   }
 
-  /** Anti-join `base` against every delete file visible at version `v`,
-    * grouped per key column (one anti-join per distinct column, however
-    * many delete commits accumulated). No-op when the version carries no
-    * deletes — the common case pays nothing.
+  /** Anti-join `base` against every delete file a version's `entries`
+    * carry, grouped per key column (one anti-join per distinct column,
+    * however many delete commits accumulated). No-op when the version
+    * carries no deletes — the common case pays nothing.
     */
-  private def applyDeletes(spark: SparkSession, dir: String, v: Int,
-      base: DataFrame): DataFrame = {
+  private def applyDeletes(spark: SparkSession, dir: String,
+      entries: Seq[ManifestEntry], base: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val dels = entriesAt(spark, dir, v).collect { case d: DeleteEntry => d }
+    val dels = entries.collect { case d: DeleteEntry => d }
     dels.groupBy(_.keyCol).toSeq.sortBy(_._1).foldLeft(base) { case (df, (c, es)) =>
       // delete files are single-column by construction (deleteRows writes
       // keys.select(keyCol)); bind by POSITION, not name — a later
@@ -1549,12 +1453,18 @@ object Snapshots {
   def read(spark: SparkSession, dir: String, version: Int = -1,
       mergeSchema: Boolean = false): DataFrame = {
     val v = if (version < 0) latestVersion(spark, dir) else version
-    val entries = entriesAt(spark, dir, v)
-    applyDeletes(spark, dir, v,
+    readEntries(spark, dir, entriesAt(spark, dir, v), mergeSchema)
+  }
+
+  /** The full read of one parsed manifest: every batch, masked, minus
+    * the deleted keys.
+    */
+  private def readEntries(spark: SparkSession, dir: String,
+      entries: Seq[ManifestEntry], mergeSchema: Boolean): DataFrame =
+    applyDeletes(spark, dir, entries,
       readMasked(spark, dir,
         entries.collect { case b: BatchEntry => b.batch },
         entries, mergeSchema))
-  }
 
   /** Change-data feed between two versions: every row added or removed
     * going vFrom → vTo, tagged `insert` / `delete` (multiset semantics —
@@ -1586,93 +1496,6 @@ object Snapshots {
       .unionByName(from.exceptAll(to).withColumn("change_type", lit("delete")))
   }
 
-  /** Drop versions below `keepFrom` and delete batch directories no
-    * surviving manifest references — the VACUUM half of the replace
-    * commit's "old batches stay for history". Returns the deleted batch
-    * directories. Time travel below `keepFrom` stops working; reads at
-    * surviving versions are untouched (their file lists don't change).
-    *
-    * Also sweeps ORPHANED batch directories: data written by a writer
-    * that died (or gave up) before publishing appears in NO manifest and
-    * would otherwise leak forever (writer-unique names mean nothing ever
-    * reclaims the path). Only orphans whose directory mtime is older
-    * than `orphanGraceMs` go — a LIVE writer's in-flight batch is always
-    * younger than the grace window (Delta VACUUM's retention-interval
-    * contract, applied to staging data).
-    */
-  def vacuum(spark: SparkSession, dir: String, keepFrom: Int,
-      orphanGraceMs: Long = 3600L * 1000): Seq[String] = {
-    val f = fs(spark, dir)
-    val all = versions(spark, dir)
-    require(all.contains(keepFrom), s"keepFrom=$keepFrom not a version of $dir")
-    // tagged versions are pinned below the watermark too (same contract
-    // as the keepVersions overload): a tag's state must stay readable
-    val tagged = tags(spark, dir).map(_._2).toSet
-    val (drop, keep) = all.partition(v => v < keepFrom && !tagged(v))
-    // "referenced" spans batch dirs AND delete files — a delete file a
-    // surviving version still anti-joins must outlive the vacuum, and one
-    // only dropped manifests reference (e.g. after compactDeletes folded
-    // it) is reclaimed here, completing the delete lifecycle
-    // txn marks render as empty paths — they reference no file and must
-    // never reach a delete call (an empty relative path would resolve to
-    // the table root itself)
-    val referenced = keep.flatMap(entriesAt(spark, dir, _)).map(_.path)
-      .filter(_.nonEmpty).toSet
-    // FOREIGN (absolute) entries are a shallow clone's references into
-    // its parent table — never this table's to reclaim, whatever version
-    // they appear in: dropped along with their manifest, excluded from
-    // both the delete pass and the freed-list the caller sees
-    val dead = drop.flatMap(entriesAt(spark, dir, _)).map(_.path).distinct
-      .filter(_.nonEmpty).filterNot(referenced)
-      .filterNot(p => p.startsWith("/") || p.contains("://"))
-    dead.foreach(b => f.delete(new Path(s"$dir/$b"), true))
-    drop.foreach(v => f.delete(manifestPath(dir, v), false))
-    // orphan sweep: staged dirs referenced by NO surviving manifest (the
-    // dropped manifests' own entries were just handled above, so at this
-    // point `referenced` — the keep set — is the full live reference set)
-    val cutoff = System.currentTimeMillis() - orphanGraceMs
-    val orphans = Seq("data", "deletes").flatMap { sub =>
-      val root = new Path(s"$dir/$sub")
-      if (!f.exists(root)) Seq.empty
-      else f.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getModificationTime < cutoff &&
-          !referenced.contains(s"$sub/${s.getPath.getName}"))
-        .map(p => s"$sub/${p.getPath.getName}")
-    }
-    orphans.foreach(p => f.delete(new Path(s"$dir/$p"), true))
-    dead ++ orphans
-  }
-
-  private def readManifestEntries(spark: SparkSession, dir: String, v: Int): Seq[String] = {
-    val f = fs(spark, dir)
-    val p = manifestPath(dir, v)
-    require(f.exists(p), s"version $v not found at $dir")
-    val in = f.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    // manifest body: one data directory per line, optionally followed by
-    // tab-separated column/min/max stats (JSON-free on purpose — no
-    // parser dependency, trivially greppable)
-    body.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  /** Atomic publish-if-absent: write the manifest body to a
-    * writer-unique temp name, then move it to `vNNNNN.json` with
-    * create-if-absent semantics. Returns false (manifest untouched) if
-    * another writer already owns the version. A reader either sees the
-    * complete manifest or no version at all.
-    *
-    *  - local fs: POSIX hard-link — link(2) is atomic and fails with
-    *    EEXIST when the destination exists. Rename is NOT a lock here:
-    *    RawLocalFileSystem renames via File.renameTo, which silently
-    *    overwrites an existing destination (ADVICE r6).
-    *  - other stores: Hadoop rename, which the HDFS contract defines as
-    *    failing when the destination exists. (S3-style stores without
-    *    atomic create-if-absent degrade to best-effort — documented.)
-    */
-  private def publishIfAbsent(f: FileSystem, dir: String, v: Int,
-      nonce: String, batches: Seq[String]): Boolean =
-    coordinator.publishIfAbsent(f, dir, v, nonce, batches)
-
   /** Pluggable commit coordination: everything the optimistic protocol
     * needs from the storage layer is this ONE primitive — atomically
     * bind version `v` to a manifest body, returning false if the slot is
@@ -1698,6 +1521,20 @@ object Snapshots {
       publishViaFs(f, dir, v, nonce, batches)
   }
 
+  /** Atomic publish-if-absent: write the manifest body to a
+    * writer-unique temp name, then move it to `vNNNNN.json` with
+    * create-if-absent semantics. Returns false (manifest untouched) if
+    * another writer already owns the version. A reader either sees the
+    * complete manifest or no version at all.
+    *
+    *  - local fs: POSIX hard-link — link(2) is atomic and fails with
+    *    EEXIST when the destination exists. Rename is NOT a lock here:
+    *    RawLocalFileSystem renames via File.renameTo, which silently
+    *    overwrites an existing destination (ADVICE r6).
+    *  - other stores: Hadoop rename, which the HDFS contract defines as
+    *    failing when the destination exists. (S3-style stores without
+    *    atomic create-if-absent degrade to best-effort — documented.)
+    */
   private def publishViaFs(f: FileSystem, dir: String, v: Int,
       nonce: String, batches: Seq[String]): Boolean = {
     f.mkdirs(manifestDir(dir))

@@ -383,6 +383,18 @@ class SnapshotsSpec extends SparkSpecBase {
       assert(raced)
       assert(Snapshots.read(spark, t, 2).select("id").collect().map(_.getLong(0)).toSet
         == Set(100L, 101L, 6L, 7L, 8L))
+      // optimize folds the version it read: losing its slot aborts the
+      // fold and reclaims the staged batch instead of leaking it
+      val fs = new org.apache.hadoop.fs.Path(t)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def dataDirs() = fs.listStatus(new org.apache.hadoop.fs.Path(s"$t/data"))
+        .map(_.getPath.getName).toSet
+      val before = dataDirs()
+      raced = false
+      val e = intercept[IllegalStateException](Snapshots.optimize(spark, t))
+      assert(raced)
+      assert(e.getMessage.contains("rerun optimize"), e.getMessage)
+      assert(dataDirs() == before, s"optimize left ${dataDirs() -- before}")
     } finally Snapshots.coordinator = real
   }
 
@@ -881,6 +893,11 @@ class SnapshotsSpec extends SparkSpecBase {
     }
     assert(ev.getMessage.contains("referenced by merged manifests"),
       ev.getMessage)
+    val evf = intercept[IllegalArgumentException] {
+      Snapshots.vacuum(spark, bd, keepFrom = Snapshots.latestVersion(spark, bd))
+    }
+    assert(evf.getMessage.contains("referenced by merged manifests"),
+      evf.getMessage)
     assert(Snapshots.read(spark, t).count() == 17) // main intact (15 + 2)
     // a branch main never merged vacuums freely
     val t3 = freshTable("branchvac")
@@ -1131,5 +1148,153 @@ class SnapshotsSpec extends SparkSpecBase {
     val r = Snapshots.read(spark, t)
     assert(r.columns.contains("id") && !r.columns.contains("row_id"))
     assert(r.select("id").as[Long].collect().toSet == (100L to 102L).toSet)
+  }
+
+  test("manifest format: every mutation kind writes the pinned bytes") {
+    import spark.implicits._
+    val t = freshTable("pin")
+    val root = t.stripSuffix("/pin")
+    def rows(r: Range) = r.map(i => (i.toLong, s"row$i", i * 2L)).toDF("id", "v", "x")
+    Snapshots.commit(rows(1 to 10), t, append = false, statsCol = Some("id"),
+      bloomFpp = 0.05)                                                    // v0
+    Snapshots.commit(rows(11 to 15), t, append = true)                    // v1
+    Snapshots.commitWithTxn(rows(16 to 20), t, "s1", 0L, Some("id"))      // v2
+    assert(Snapshots.commitWithTxn(rows(16 to 20), t, "s1", 0L).isEmpty)  // covered
+    Snapshots.deleteRows(Seq(3L, 12L).toDF("id"), t, "id")                // v3
+    Snapshots.overwriteRange(rows(5 to 7), t, "id", 5L, 7L,
+      statsCol = Some("id"))                                              // v4
+    Snapshots.renameColumn(spark, t, "v", "label")                        // v5
+    Snapshots.dropColumn(spark, t, "x")                                   // v6
+    Snapshots.compactDeletes(spark, t, statsCol = Some("id"))             // v7
+    Snapshots.optimize(spark, t, statsCol = Some("id"))                   // v8
+    Snapshots.restore(spark, t, 4)                                        // v9
+    Snapshots.commitReplaceWithTxn(rows(30 to 32), t, "s2", 7L)           // v10
+    Snapshots.tag(spark, t, "pin")
+    val clone = freshTable("pin_clone")
+    Snapshots.cloneTable(spark, t, clone, version = 4)                    // clone v0
+    Snapshots.createBranch(spark, t, "b")                                 // branch v0
+    val bd = Snapshots.branchDir(t, "b")
+    Snapshots.commit(rows(40 to 41), bd, append = true)                   // branch v1
+    Snapshots.mergeBranch(spark, t, "b")                                  // v11
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listing(name: String, dir: String): Seq[String] =
+      Snapshots.versions(spark, dir).flatMap { v =>
+        val in = fs.open(new org.apache.hadoop.fs.Path(f"$dir/_versions/v$v%05d.json"))
+        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        assert(body.endsWith("\n"), s"$name v$v: manifest must end with a newline")
+        s"== $name v$v" +: body.linesIterator.toSeq
+      }
+    val actual = (listing("main", t) ++ listing("clone", clone) ++
+        listing("branch", bd) ++
+        Snapshots.tags(spark, t).map { case (n, v) => s"== tag $n v$v" })
+      .map(_.replace(root, "<root>")
+        .replaceAll("(batch|del)-([0-9]+)-[0-9a-f]{8}", "$1-$2-<nonce>")
+        .replace("\t", "\\t"))
+      .mkString("\n")
+    val expected =
+      """|== main v0
+      |K\treplace
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |== main v1
+      |K\tappend
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |data/batch-1-<nonce>
+      |== main v2
+      |K\tappend
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |data/batch-1-<nonce>
+      |data/batch-2-<nonce>\tid\t16\t20
+      |T\ts1\t0
+      |== main v3
+      |K\tdelete
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |data/batch-1-<nonce>
+      |data/batch-2-<nonce>\tid\t16\t20
+      |T\ts1\t0
+      |D\tdeletes/del-3-<nonce>\tid
+      |== main v4
+      |K\treplace-where
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |M\tdata/batch-0-<nonce>\tid\t5\t7
+      |data/batch-1-<nonce>
+      |M\tdata/batch-1-<nonce>\tid\t5\t7
+      |data/batch-2-<nonce>\tid\t16\t20
+      |T\ts1\t0
+      |D\tdeletes/del-3-<nonce>\tid
+      |data/batch-4-<nonce>\tid\t5\t7\tAAAAAgAAAAUAAAAAAAAAAUkmMAEAIIAA
+      |== main v5
+      |K\trename
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |M\tdata/batch-0-<nonce>\tid\t5\t7
+      |data/batch-1-<nonce>
+      |M\tdata/batch-1-<nonce>\tid\t5\t7
+      |data/batch-2-<nonce>\tid\t16\t20
+      |T\ts1\t0
+      |D\tdeletes/del-3-<nonce>\tid
+      |data/batch-4-<nonce>\tid\t5\t7\tAAAAAgAAAAUAAAAAAAAAAUkmMAEAIIAA
+      |R\tv\tlabel
+      |== main v6
+      |K\tdrop
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |M\tdata/batch-0-<nonce>\tid\t5\t7
+      |data/batch-1-<nonce>
+      |M\tdata/batch-1-<nonce>\tid\t5\t7
+      |data/batch-2-<nonce>\tid\t16\t20
+      |T\ts1\t0
+      |D\tdeletes/del-3-<nonce>\tid
+      |data/batch-4-<nonce>\tid\t5\t7\tAAAAAgAAAAUAAAAAAAAAAUkmMAEAIIAA
+      |R\tv\tlabel
+      |X\tx
+      |== main v7
+      |K\tcompact
+      |data/batch-2-<nonce>\tid\t16\t20
+      |R\tv\tlabel
+      |X\tx
+      |data/batch-7-<nonce>\tid\t1\t15\tAAAAAgAAAAUAAAAAAAAAAplnENcipeQk0eUwogZMlEQ=
+      |T\ts1\t0
+      |== main v8
+      |K\toptimize
+      |data/batch-8-<nonce>\tid\t1\t20\tAAAAAgAAAAUAAAAAAAAAA4HmOMECJbAk0SdyJjxM5AXbVRCTAoQ0RQ==
+      |T\ts1\t0
+      |== main v9
+      |K\trestore
+      |data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |M\tdata/batch-0-<nonce>\tid\t5\t7
+      |data/batch-1-<nonce>
+      |M\tdata/batch-1-<nonce>\tid\t5\t7
+      |data/batch-2-<nonce>\tid\t16\t20
+      |D\tdeletes/del-3-<nonce>\tid
+      |data/batch-4-<nonce>\tid\t5\t7\tAAAAAgAAAAUAAAAAAAAAAUkmMAEAIIAA
+      |T\ts1\t0
+      |== main v10
+      |K\treplace
+      |T\ts1\t0
+      |data/batch-10-<nonce>
+      |T\ts2\t7
+      |== main v11
+      |K\tmerge
+      |data/batch-10-<nonce>
+      |<root>/pin/branches/b/data/batch-1-<nonce>
+      |== clone v0
+      |K\tclone
+      |<root>/pin/data/batch-0-<nonce>\tid\t1\t10\tAAAAAgAAAAQAAAAAAAAAAclnEJMGbIQA
+      |M\t<root>/pin/data/batch-0-<nonce>\tid\t5\t7
+      |<root>/pin/data/batch-1-<nonce>
+      |M\t<root>/pin/data/batch-1-<nonce>\tid\t5\t7
+      |<root>/pin/data/batch-2-<nonce>\tid\t16\t20
+      |D\t<root>/pin/deletes/del-3-<nonce>\tid
+      |<root>/pin/data/batch-4-<nonce>\tid\t5\t7\tAAAAAgAAAAUAAAAAAAAAAUkmMAEAIIAA
+      |== branch v0
+      |K\tclone
+      |<root>/pin/data/batch-10-<nonce>
+      |== branch v1
+      |K\tappend
+      |<root>/pin/data/batch-10-<nonce>
+      |data/batch-1-<nonce>
+      |== tag pin v10""".stripMargin
+    if (actual != expected) println(s"PIN-ACTUAL-BEGIN\n$actual\nPIN-ACTUAL-END")
+    assert(actual == expected)
   }
 }

@@ -121,6 +121,20 @@ out=$(grep -rnE --include='*.scala' "$PLUMBING" src/main \
   | sed -E 's#[[:space:]]//.*$##' | grep -E "$PLUMBING")
 check "streaming plumbing only in MicroBatch" "^none$" "${out:-none}"
 
+# 21. the snapshot store has one commit path: in engine/Snapshots.scala
+# code lines (comments stripped as in check 20) the nonce, the staging
+# write, the coordinator call and the manifest-line split each occur
+# exactly once (grep only, no build needed)
+SNAP=src/main/scala/graft/engine/Snapshots.scala
+code=$(grep -n '' "$SNAP" | sed -E 's#^([0-9]+:)[[:space:]]*#\1#' \
+  | grep -vE '^[0-9]+:(//|\*|/\*)' | sed -E 's#[[:space:]]//.*$##')
+out=""
+for pat in 'UUID.randomUUID' 'mode("errorifexists")' 'coordinator.publishIfAbsent' "split('\\t')"; do
+  n=$(echo "$code" | grep -cF "$pat")
+  [ "$n" = "1" ] || out="$out $pat=$n"
+done
+check "one commit path in Snapshots" "^once$" "${out:-once}"
+
 echo "---"
 echo "$pass passed, $fail failed"
 exit $([ "$fail" = "0" ] && echo 0 || echo 1)
